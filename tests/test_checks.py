@@ -48,6 +48,21 @@ def test_span_level_checks_share_one_explode(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+def test_check_messages_keep_quotes_backslashes_and_comments(spark):
+    # predicate and description text reach the message verbatim, and a
+    # trailing SQL comment in the predicate stays a comment
+    checks = [
+        CheckConstraint("K7", "span", "kind <> 'image' -- no images"),
+        CheckConstraint("K8", "doc", "n_spans <> 1", "it's a \\ 'one-span' doc"),
+    ]
+    got = {(r.doc_id, r.rule_id, r.message) for r in check_constraint_violations(_fixture(spark), checks).collect()}
+    assert got == {
+        ("d1", "K7", "check failed: kind <> 'image' -- no images"),
+        ("d2", "K8", "check failed: it's a \\ 'one-span' doc"),
+        ("d5", "K8", "check failed: it's a \\ 'one-span' doc"),
+    }
+
+
 def test_null_predicate_passes(spark):
     # ANSI CHECK: NULL result is NOT a violation — length(NULL text) is
     # NULL, so kind='image' spans never trip K2's length comparison, and
@@ -83,8 +98,11 @@ def test_rules_hash_covers_checks(spark):
 def test_invalid_checks_rejected(spark):
     with pytest.raises(ValueError, match="level"):
         ValidationEngine(ValidationConfig(check_constraints=(CheckConstraint("K1", "row", "true"),)))
-    with pytest.raises(ValueError, match="collides"):
-        ValidationEngine(ValidationConfig(check_constraints=(CheckConstraint("U1", "doc", "true"),)))
+    for reserved in ("U1", "S9"):
+        with pytest.raises(ValueError, match="collides"):
+            ValidationEngine(
+                ValidationConfig(check_constraints=(CheckConstraint(reserved, "doc", "true"),))
+            )
     with pytest.raises(ValueError, match="duplicate"):
         ValidationEngine(
             ValidationConfig(check_constraints=(K_OFFSET, CheckConstraint("K3", "doc", "true")))

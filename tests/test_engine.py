@@ -103,9 +103,9 @@ def test_no_python_udf_in_default_plan(spark):
     """Vectorization discipline (SURVEY.md §7.3): row-at-a-time Python
     (BatchEvalPython) is never allowed; since round 4 the default pack's
     one sanctioned Python stage is the Arrow-batched Pos line/col
-    derivation (RuleParams.line_col_impl='arrow' — measured 2.4× the
-    interpreted expr fold; 'expr' keeps the pack fully Python-free,
-    asserted in test_plans.py::test_full_pack_python_eval_contract)."""
+    derivation (functions/text.py::span_start_positions — measured 2.4×
+    an interpreted Catalyst fold; see
+    test_plans.py::test_full_pack_python_eval_contract)."""
     docs = generate_documents(spark, n_docs=10, seed=1).drop("_fixture_class")
     cat = generate_media_catalog(spark)
     plan = ValidationEngine().violations(docs, cat)._jdf.queryExecution().executedPlan().toString()

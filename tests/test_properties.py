@@ -59,6 +59,55 @@ def test_rules_never_raise_and_positions_in_range(spark, spans):
         assert r["rule_id"] in {"S1", "S2", "S3", "S4", "S5", "S6", "S7", "S8"}
 
 
+# span texts for the line/col contract: newlines, carriage returns,
+# astral-plane characters (one code point, two UTF-16 units), control
+# characters, empty and null texts
+lc_text_st = st.one_of(
+    st.none(),
+    st.text(alphabet=st.sampled_from(["a", " ", "\n", "\r", "\x01", "\U0001F600"]), max_size=6),
+)
+lc_span_st = st.tuples(
+    st.sampled_from(["text", "image"]),
+    lc_text_st,
+    st.sampled_from([None, "m1", "ghost"]),
+    st.integers(min_value=0, max_value=50),
+)
+# each doc ends in a planted control-character span, so S5 always fires
+# at the end of the full prefix
+lc_docs_st = st.lists(
+    st.lists(lc_span_st, max_size=6).map(lambda sp: sp + [("text", "\x02", None, 99)]),
+    min_size=1,
+    max_size=3,
+)
+
+
+def _start(texts):
+    """(line, col) where the next span starts after ``texts``."""
+    prefix = "".join(t or "" for t in texts)
+    nl = prefix.rfind("\n")
+    return 1 + prefix.count("\n"), len(prefix) - nl if nl >= 0 else len(prefix) + 1
+
+
+@given(docs=lc_docs_st)
+@_settings
+def test_line_col_equals_prefix_fold(spark, docs):
+    """Every positioned violation's (line, col) is the start of its span
+    in the concatenated texts of the earlier spans; doc-level (S3/S4) and
+    referential (R1) rows carry no position."""
+    df = make_docs(spark, [(f"d{i}", spans, "p0") for i, spans in enumerate(docs)])
+    cat = spark.createDataFrame([("m1",)], "media_ref string")
+    rows = span_rule_violations(
+        df, RuleParams(max_spans=3, max_text_bytes=8), media_catalog=cat
+    ).collect()
+    assert {r["doc_id"] for r in rows if r["rule_id"] == "S5"} == {f"d{i}" for i in range(len(docs))}
+    for r in rows:
+        if r["rule_id"] in ("S3", "S4", "R1"):
+            assert r["line"] is None and r["col"] is None, r
+        else:
+            texts = [s[1] for s in docs[int(r["doc_id"][1:])]]
+            assert (r["line"], r["col"]) == _start(texts[: r["span_pos"]]), r
+
+
 @given(
     vals=st.lists(
         st.floats(min_value=-1e6, max_value=1e6, allow_nan=False), min_size=1, max_size=200

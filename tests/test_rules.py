@@ -8,6 +8,7 @@ offset) for every planted breach.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import make_docs
@@ -333,21 +334,10 @@ def test_line_col_positions(spark):
         ("d3", 0, 1, 1),
         ("d3", 1, 2, 1),   # prefix ends with '\n': column resets
     ]
-    # the pure-JVM fold computes identical integers to the Arrow default
-    got_expr = sorted(
-        (r["doc_id"], r["span_pos"], r["line"], r["col"])
-        for r in span_rule_violations(docs, RuleParams(line_col_impl="expr"))
-        .filter("rule_id = 'S5'")
-        .collect()
-    )
-    assert got_expr == got
     # doc/table-level rows stay position-free
     limits = RuleParams(max_spans=2, max_text_bytes=0)
     s3 = span_rule_violations(docs, limits).filter("rule_id = 'S3'").collect()
     assert s3 and all(r["line"] is None and r["col"] is None for r in s3)
-    # the opt-out keeps the schema but nulls the derivation
-    off = span_rule_violations(docs, RuleParams(emit_line_col=False))
-    assert {r["line"] for r in off.collect()} == {None}
 
 
 def test_functional_dependency_violations(spark):
@@ -696,3 +686,25 @@ def test_media_refcounts_and_orphans(spark):
     got = {r["media_ref"]: r["n_refs"] for r in media_refcounts(docs, cat).collect()}
     assert got == {"m1": 2, "m2": 1, "m3": 0}
     assert [r["media_ref"] for r in orphan_media(docs, cat).collect()] == ["m3"]
+
+
+@pytest.mark.parametrize(
+    "query", ["span_pack_violations", "span_pack_overlap", "span_pack_check_constraints"]
+)
+def test_span_pack_full_rows_match_duckdb_twin(spark, sf_dir, query):
+    """Every column of every violation row — messages and line/col
+    included — equals the DuckDB ``oracle_sql()`` twin's, under the
+    oracle gate's own normalization (scripts/check_oracles.py)."""
+    import duckdb
+
+    import __spark_entry__ as entry
+    from scripts.check_oracles import value_hash
+
+    sdf = entry.queries()[query](spark, sf_dir)
+    srows = [tuple(r) for r in sdf.collect()]
+    res = duckdb.connect().execute(entry.oracle_sql()[query])
+    ocols = [d[0] for d in res.description]
+    orows = res.fetchall()
+    assert sorted(sdf.columns) == sorted(ocols)
+    assert srows and len(srows) == len(orows)
+    assert value_hash(sdf.columns, srows) == value_hash(ocols, orows)

@@ -1,7 +1,11 @@
 """The rule pack: zParse's strict-parser contract, table-scale.
 
-Every *span/doc-level* rule compiles to plain JVM column expressions over
-a map-side posexplode of the spans array. The scale decisions:
+Every *span/doc-level* rule is declared as data — a ``DeclaredRule``
+row (id, kind, level, description, violation SQL, message SQL,
+positioned) in ``span_rules`` — and ONE compiler (``_compile_rules``)
+turns the active rows into plain JVM column expressions over a map-side
+posexplode of the spans array. User CHECK constraints (K-rules) are rows
+of the same shape and go through the same compiler. The scale decisions:
 
 - **Explode without shuffle, checks inside codegen.** posexplode is a
   narrow Generate — no Exchange anywhere in the span-rule plan (asserted
@@ -13,15 +17,17 @@ a map-side posexplode of the spans array. The scale decisions:
   predecessor's offset (a shifted copy of spans.offset) before exploding.
   Doc-level limits (S3/S4) ride the same explode as per-doc scalars and
   fire on the first span row — the whole pack is ONE scan + ONE Generate.
-- **No per-row Python.** The escape/unicode/control-char grammars from
-  the reference lexer (crates/zparse/src/lexer/json.rs:86-262) are
-  compiled to Java regexes evaluated JVM-side. The ONE stage that leaves
-  the JVM by default is the Pos line/col derivation — an Arrow-batched
-  pandas UDF (the north-star's blessed vectorized path), because its
-  running fold is exactly what Catalyst interprets worst (measured 2.4×);
-  ``RuleParams(line_col_impl='expr')`` keeps the pack 100% Python-free.
-  A vectorized Arrow pandas_udf fallback also exists in
-  ``zparse_spark.functions.text`` for grammars regex can't express.
+- **No per-row Python in the rules.** The escape/unicode/control-char
+  grammars from the reference lexer (crates/zparse/src/lexer/json.rs:86-262)
+  are compiled to Java regexes evaluated JVM-side. The ONE stage that
+  leaves the JVM is the Pos line/col derivation,
+  ``zparse_spark.functions.text.span_start_positions`` — an Arrow-batched
+  pandas UDF (the vectorized Python path of the CIDR 2022 paper), because
+  its running fold is exactly what Catalyst interprets worst (measured
+  2.4× against a Catalyst ``aggregate`` fold, since removed). It is the
+  engine's only line/col implementation. A vectorized Arrow pandas_udf
+  fallback also exists in ``zparse_spark.functions.text`` for grammars
+  regex can't express.
 
 Table-level rules (uniqueness, referential, drift) are the operators the
 reference *couldn't* have (single-thread, single buffer) and are where
@@ -46,6 +52,8 @@ Reference parity map (file:line in /root/reference):
 
 from __future__ import annotations
 
+import functools
+import operator
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
@@ -62,6 +70,25 @@ class Rule:
     description: str
 
 
+@dataclass(frozen=True)
+class DeclaredRule(Rule):
+    """A rule as data: SQL the compiler (``_compile_rules``) turns into
+    columns. ``violation_sql`` is a boolean over one row of the rule's
+    frame (NULL counts as not fired); ``message_sql`` is a string over
+    the same columns, evaluated on violating rows only. ``level='doc'``
+    rows carry no span_pos/offset; ``positioned`` rows carry the span's
+    (line, col)."""
+
+    violation_sql: str
+    message_sql: str
+    positioned: bool
+
+
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 # --------------------------------------------------------------------------
 # configuration (the reference's per-parser Config, json/parser.rs:14-23)
 # --------------------------------------------------------------------------
@@ -69,7 +96,8 @@ class Rule:
 
 @dataclass(frozen=True)
 class RuleParams:
-    """Limits + domains. 0 = unlimited, like the reference Config."""
+    """Limits + domains. 0 = unlimited, like the reference Config. Every
+    field is part of rules_hash via RuleParams' repr."""
 
     max_spans: int = 128  # analog of max_depth (default 128, json/parser.rs:9)
     max_text_bytes: int = 10 * 1024 * 1024  # analog of max_size 10 MiB
@@ -83,32 +111,20 @@ class RuleParams:
     # stronger than S1's start-order check; off by default because
     # extent semantics only bind when offsets are character positions
     # in the canonical reconstruction (the input_hint leaves offset an
-    # opaque ordering key). Part of rules_hash via RuleParams' repr.
+    # opaque ordering key).
     check_span_overlap: bool = False
-    # derive the reference's Pos line/col (error.rs:8-18) for span-level
-    # violations: the 1-based start of the violating span in the doc's
-    # canonical text reconstruction. One extra O(text) pass per doc in
-    # the span-rule stage; disable for position-free pipelines. Part of
-    # rules_hash via RuleParams' repr.
-    emit_line_col: bool = True
-    # 'arrow' (default): Arrow-batched pandas UDF — the north-star's
-    # blessed vectorized path; measured 2.4× the pure-JVM fold at 100k
-    # docs/local[8] because Spark interprets HOF lambdas. 'expr': the
-    # Catalyst fold — keeps the plan 100% Python-free for clusters
-    # without Python workers. Identical integers either way.
-    line_col_impl: str = "arrow"
     psi_threshold: float = 0.25
     # probability floor for PSI's zero buckets; 1e-4 keeps a kind that is
     # merely absent-by-chance in a small partition from exploding the score
     drift_epsilon: float = 1e-4
     # optional second drift metric: KL(partition ‖ global) with the same
     # eps floor. None = PSI-only (the historical D1); setting it changes
-    # rule semantics and therefore rules_hash (via RuleParams' repr)
+    # rule semantics and therefore rules_hash
     kl_threshold: float | None = None
 
 
 # --------------------------------------------------------------------------
-# span-level rules S1..S8 — exploded, whole-stage-codegen formulation
+# span-level rules S1..S9 — declared as data, compiled into one map stage
 # --------------------------------------------------------------------------
 
 # Java-regex grammars distilled from the reference lexer:
@@ -140,67 +156,164 @@ _VALID_UNICODE = (
 )
 
 
-def _span_checks(p: RuleParams) -> list[tuple[str, str, Column]]:
-    """(rule_id, kind, predicate) over the exploded span frame with
-    columns kind/text/media_ref/offset/prev_offset/span_pos. Plain
-    column expressions — whole-stage codegen, unlike HOF lambdas which
-    Spark interprets (measured ~25% slower on the same data). Violation
-    MESSAGES are deliberately not built here: they are attached after
-    the explode+filter (see span_rule_violations) so the hot path never
-    pays for string construction."""
-    domain = F.array(*[F.lit(k) for k in p.kind_domain])
-    kind, text, media_ref = F.col("kind"), F.col("text"), F.col("media_ref")
-    offset, prev_offset = F.col("offset"), F.col("prev_offset")
-    regressed = offset < prev_offset if p.allow_equal_offsets else offset <= prev_offset
-    overlap = (
-        [
-            (
-                "S9",
-                ErrorKind.INVALID_ARRAY,
-                (F.col("span_pos") >= 1) & (offset < F.col("prev_end")),
-            )
-        ]
-        if p.check_span_overlap
-        else []
-    )
-    return overlap + [
-        ("S1", ErrorKind.INVALID_ARRAY, (F.col("span_pos") >= 1) & regressed),
-        ("S2", ErrorKind.INVALID_TOKEN, kind.isNull() | ~F.array_contains(domain, kind)),
-        ("S5", ErrorKind.INVALID_TOKEN, text.rlike(_CONTROL_CHARS)),
-        (
-            "S6",
-            ErrorKind.INVALID_ESCAPE_SEQUENCE,
-            # cheap contains() gate: a text with no backslash can't have a
-            # bad escape, and skipping the anchored full-match regex on
-            # the (overwhelmingly common) clean case is a large win
-            text.contains("\\") & ~text.rlike(_VALID_ESCAPES),
-        ),
-        (
-            "S7",
-            ErrorKind.INVALID_UNICODE_ESCAPE,
-            # the contains gate doubles as a semantic filter: every S7
-            # failure mode requires a literal "\u" substring, and pure-S6
-            # problems (trailing backslash, \q) never contain one
-            text.contains("\\u") & ~text.rlike(_VALID_UNICODE),
-        ),
-        (
-            "S8",
-            ErrorKind.EXPECTED,
-            ((kind == "text") & media_ref.isNotNull()) | ((kind != "text") & media_ref.isNull()),
+def span_rules(p: RuleParams, fused_ref: bool = False) -> list[DeclaredRule]:
+    """The built-in span pack as data: the rows active under ``p``, in
+    emission order. S9 is active with ``check_span_overlap``, S3/S4 with
+    a cap above 0, and R1 when ``fused_ref`` (a broadcast catalog joined
+    into the span stage). SQL reads the exploded frame of
+    ``span_rule_violations``: kind, text, media_ref, offset, prev_offset,
+    prev_end (S9 only), span_pos, n_spans, total_bytes, _cat_hit (R1 only).
+
+    The S5–S7 regexes are raw SQL literals (``r'…'``), so the pattern
+    text is exactly the Java regex ``Column.rlike`` would get. The cheap
+    ``contains`` gates skip the anchored full-match regexes on the
+    (overwhelmingly common) backslash-free text; for S7 the gate doubles
+    as a semantic filter — every S7 failure needs a literal ``\\u``, and
+    pure-S6 problems (trailing backslash, ``\\q``) never contain one."""
+    kind = "coalesce(kind, '<null>')"
+    domain = ", ".join(_sql_str(k) for k in p.kind_domain)
+    rows = [
+        DeclaredRule(
+            "S1", ErrorKind.INVALID_ARRAY, "span", "offset strictly increasing within doc",
+            f"span_pos >= 1 AND `offset` {'<' if p.allow_equal_offsets else '<='} prev_offset",
+            "concat('offset regression: ', CAST(`offset` AS STRING),"
+            " ' <= prev ', CAST(prev_offset AS STRING))",
+            True,
         ),
     ]
+    if p.check_span_overlap:
+        rows.append(DeclaredRule(
+            "S9", ErrorKind.INVALID_ARRAY, "span",
+            "span extent (offset + text length) must not overlap the next span",
+            "span_pos >= 1 AND `offset` < prev_end",
+            "concat('span overlap: offset ', CAST(`offset` AS STRING),"
+            " ' < prev end ', CAST(prev_end AS STRING))",
+            True,
+        ))
+    rows.append(DeclaredRule(
+        "S2", ErrorKind.INVALID_TOKEN, "span", "span kind in domain",
+        f"kind IS NULL OR NOT array_contains(array({domain}), kind)",
+        f"concat('kind not in domain: ', {kind})",
+        True,
+    ))
+    # S3/S4 document-level limits fire once per doc, on the first span row
+    # (span_pos/offset null in the emitted violation — the reference's
+    # error-at-opener position lifted to error-at-document); a doc that
+    # could violate them always has at least one span.
+    if p.max_spans > 0:
+        rows.append(DeclaredRule(
+            "S3", ErrorKind.MAX_DEPTH_EXCEEDED, "doc", "span count under cap",
+            f"span_pos = 0 AND n_spans > {p.max_spans}",
+            f"concat('span count ', CAST(n_spans AS STRING), ' > max {p.max_spans}')",
+            False,
+        ))
+    if p.max_text_bytes > 0:
+        rows.append(DeclaredRule(
+            "S4", ErrorKind.MAX_SIZE_EXCEEDED, "doc", "total text bytes under cap",
+            f"span_pos = 0 AND total_bytes > {p.max_text_bytes}",
+            f"concat('text bytes ', CAST(total_bytes AS STRING), ' > max {p.max_text_bytes}')",
+            False,
+        ))
+    rows += [
+        DeclaredRule(
+            "S5", ErrorKind.INVALID_TOKEN, "span", "no raw control chars in text",
+            f"text RLIKE r'{_CONTROL_CHARS}'",
+            "'control character in text'",
+            True,
+        ),
+        DeclaredRule(
+            "S6", ErrorKind.INVALID_ESCAPE_SEQUENCE, "span", "escape sequences valid",
+            f"contains(text, '\\\\') AND NOT text RLIKE r'{_VALID_ESCAPES}'",
+            "'invalid escape sequence'",
+            True,
+        ),
+        DeclaredRule(
+            "S7", ErrorKind.INVALID_UNICODE_ESCAPE, "span", "\\u escapes valid incl. surrogates",
+            f"contains(text, '\\\\u') AND NOT text RLIKE r'{_VALID_UNICODE}'",
+            "'invalid unicode escape'",
+            True,
+        ),
+        DeclaredRule(
+            "S8", ErrorKind.EXPECTED, "span", "media_ref iff non-text kind",
+            "(kind = 'text' AND media_ref IS NOT NULL) OR (kind != 'text' AND media_ref IS NULL)",
+            "CASE WHEN kind = 'text' THEN 'expected media_ref=null for kind=text'"
+            f" ELSE concat('expected media_ref for kind=', {kind}) END",
+            True,
+        ),
+    ]
+    if fused_ref:
+        rows.append(DeclaredRule(
+            "R1", ErrorKind.DANGLING_MEDIA_REF, "table", "media_ref exists in catalog",
+            "media_ref IS NOT NULL AND _cat_hit IS NULL",
+            "concat('dangling media_ref: ', media_ref)",
+            False,
+        ))
+    return rows
 
 
-SPAN_RULES = [
-    Rule("S1", ErrorKind.INVALID_ARRAY, "span", "offset strictly increasing within doc"),
-    Rule("S2", ErrorKind.INVALID_TOKEN, "span", "span kind in domain"),
-    Rule("S3", ErrorKind.MAX_DEPTH_EXCEEDED, "doc", "span count under cap"),
-    Rule("S4", ErrorKind.MAX_SIZE_EXCEEDED, "doc", "total text bytes under cap"),
-    Rule("S5", ErrorKind.INVALID_TOKEN, "span", "no raw control chars in text"),
-    Rule("S6", ErrorKind.INVALID_ESCAPE_SEQUENCE, "span", "escape sequences valid"),
-    Rule("S7", ErrorKind.INVALID_UNICODE_ESCAPE, "span", "\\u escapes valid incl. surrogates"),
-    Rule("S8", ErrorKind.EXPECTED, "span", "media_ref iff non-text kind"),
-]
+def _compile_rules(frame: DataFrame, rules: list[DeclaredRule]) -> DataFrame:
+    """Declared rules over one frame → violation rows, in ONE pass: a
+    pre-filter on "any rule fired", a per-row array of fired items, its
+    explode, and the messages built after the explode.
+
+    - The pre-filter runs BEFORE the item-array build: the struct
+      construction, array_compact (a RuntimeReplaceable filter HOF,
+      interpreted) and the second Generate cost ~2 s per 1M clean rows
+      that emit nothing. The disjunction re-tests each predicate once per
+      row — comparisons plus the gated regexes, far cheaper than building
+      throwaway arrays — and the explode then runs on actual violations
+      only. Output rows are identical: the filter keeps exactly the rows
+      whose item array is non-empty.
+    - The items are deliberately message-free: building messages inside
+      the lazy ``when(cond, item)`` looks free, but codegen's
+      common-subexpression elimination hoists the shared string concats
+      OUT of the lazy branches — measured 2× on the whole write-shaped
+      pass at 16M docs. Messages are one CASE over the exploded rule_id,
+      evaluated on violations only; columns no message reads (the span
+      text among them) are pruned before the explode.
+    """
+    null_i, null_l = F.lit(None).cast("int"), F.lit(None).cast("long")
+    fires = [F.coalesce(F.expr(r.violation_sql), F.lit(False)) for r in rules]
+
+    def item(r: DeclaredRule) -> Column:
+        at_span = r.level != "doc"
+        return F.struct(
+            F.lit(r.rule_id).alias("rule_id"),
+            F.lit(r.kind).alias("kind"),
+            (F.col("span_pos") if at_span else null_i).cast("int").alias("span_pos"),
+            (F.col("offset") if at_span else null_l).cast("long").alias("offset"),
+            (F.col("line") if r.positioned else null_i).cast("int").alias("line"),
+            (F.col("col") if r.positioned else null_i).cast("int").alias("col"),
+        )
+
+    items = F.array_compact(F.array(*[F.when(f, item(r)) for f, r in zip(fires, rules)]))
+    message = F.expr(
+        "CASE _v.rule_id "
+        + " ".join(f"WHEN {_sql_str(r.rule_id)} THEN {r.message_sql}" for r in rules)
+        + " END"
+    )
+    return (
+        frame.filter(functools.reduce(operator.or_, fires))
+        .select("*", F.explode(items).alias("_v"))
+        .select(
+            "partition",
+            "doc_id",
+            F.col("_v.rule_id").alias("rule_id"),
+            F.col("_v.kind").alias("kind"),
+            F.col("_v.span_pos").alias("span_pos"),
+            F.col("_v.offset").alias("offset"),
+            F.col("_v.line").alias("line"),
+            F.col("_v.col").alias("col"),
+            message.alias("message"),
+        )
+    )
+
+
+def _rule(r: Rule) -> Rule:
+    return Rule(r.rule_id, r.kind, r.level, r.description)
+
+
+SPAN_RULES = [_rule(r) for r in span_rules(RuleParams())]
 
 TABLE_RULES = [
     Rule("U1", ErrorKind.DUPLICATE_KEY, "table", "doc_id unique table-wide"),
@@ -214,8 +327,9 @@ TABLE_RULES = [
 # canonical reconstruction; the input_hint leaves offset an opaque
 # ordering key, so existing manifests never evaluated S9.
 OVERLAP_RULES = [
-    Rule("S9", ErrorKind.INVALID_ARRAY, "span",
-         "span extent (offset + text length) must not overlap the next span"),
+    _rule(r)
+    for r in span_rules(RuleParams(check_span_overlap=True))
+    if r.rule_id not in {s.rule_id for s in SPAN_RULES}
 ]
 
 # Opt-in (ValidationConfig.enable_media_decode): referenced payloads must
@@ -243,17 +357,17 @@ def span_rule_violations(
     params: RuleParams | None = None,
     media_catalog: DataFrame | None = None,
 ) -> DataFrame:
-    """Evaluate S1..S8 in ONE narrow map stage — no shuffle anywhere.
+    """Evaluate the active ``span_rules`` rows in ONE narrow map stage —
+    no shuffle anywhere.
 
-    Span rules (S1/S2/S5-S8): the spans array is zipped with its own
+    Span rules (S1/S2/S5-S9): the spans array is zipped with its own
     shifted offsets (prev_offset — so the monotonicity rule needs no
-    window/shuffle), posexploded, and every predicate is a plain column
-    expression inside whole-stage codegen. Violating rows project a
-    small violation array that is immediately filtered — HOF lambdas
-    were measured ~25% slower because Spark interprets them.
+    window/shuffle) and the per-span (line, col), posexploded, and every
+    predicate is a plain column expression inside whole-stage codegen.
 
     Doc-level limits (S3/S4): computed per document BEFORE the explode
-    (they are properties of the whole array) and unioned in.
+    (they are properties of the whole array) and checked on the first
+    span row.
 
     Fused referential (R1): when ``media_catalog`` is passed, the
     exploded frame takes a broadcast left join against the catalog keys
@@ -262,100 +376,41 @@ def span_rule_violations(
     broadcastable catalog; the engine falls back to the standalone
     SMJ-based ``referential_violations`` otherwise.
     """
+    from zparse_spark.functions.text import span_start_positions
+
     p = params or RuleParams()
     spans = F.col("spans")
 
-    # -- span-level: zip with shifted offsets, posexplode, codegen checks.
-    # arrays_zip pads to the longer side, so prev_offsets must be EMPTY
-    # (not [null]) when spans is empty or the zip would fabricate a row.
-    prev_offsets = F.when(
-        F.coalesce(F.size(spans), F.lit(0)) > 0,
-        F.concat(
-            F.array(F.lit(None).cast("int")),
-            F.slice(F.col("spans.offset"), 1, F.greatest(F.size(spans) - 1, F.lit(0))),
-        ),
-    ).otherwise(F.array().cast("array<int>"))
-    # (line, col) where each span STARTS in the canonical reconstruction
-    # (span texts concatenated in array order) — the reference Pos
-    # contract (error.rs:8-18) at table scale. One O(total text) pass per
-    # doc, riding the same narrow map stage (no shuffle either way).
-    if p.emit_line_col and p.line_col_impl == "arrow":
-        # Arrow-batched vectorized UDF over the pruned spans.text array —
-        # the one pack stage that leaves the JVM, because the running
-        # fold is exactly what Catalyst interprets worst: measured
-        # 1.0 s vs 2.4 s (expr fold) vs 3.8 s (two-extraction fold) on
-        # the +line/col delta at 100k docs / local[8].
-        from zparse_spark.functions.text import span_start_positions
+    def shifted(values: Column, dtype: str) -> Column:
+        # [null, v0, .., v(n-2)]. arrays_zip pads to the longer side, so
+        # the shifted array must be EMPTY (not [null]) when spans is empty
+        # or the zip would fabricate a row.
+        return F.when(
+            F.coalesce(F.size(spans), F.lit(0)) > 0,
+            F.concat(
+                F.array(F.lit(None).cast(dtype)),
+                F.slice(values, 1, F.greatest(F.size(spans) - 1, F.lit(0))),
+            ),
+        ).otherwise(F.array().cast(f"array<{dtype}>"))
 
-        pos_arr = span_start_positions(F.col("spans.text"))
-    elif p.emit_line_col:
-        # pure-JVM fold: each step appends this span's start cursor and
-        # advances it — ONE aggregate evaluation (an earlier shape that
-        # zipped two field-extractions of a struct-state fold evaluated
-        # the whole fold twice; measured 1.6× slower)
-        def _pos_step(acc, s):
-            text = F.coalesce(s["text"], F.lit(""))
-            nls = F.length(text) - F.length(F.replace(text, F.lit("\n"), F.lit("")))
-            prv = F.element_at(acc, -1)
-            return F.concat(
-                acc,
-                F.array(
-                    F.struct(
-                        prv["nline"].alias("line"),
-                        prv["ncol"].alias("col"),
-                        (prv["nline"] + nls).cast("int").alias("nline"),
-                        F.when(
-                            nls > 0,
-                            F.length(F.substring_index(text, "\n", -1)) + 1,
-                        )
-                        .otherwise(prv["ncol"] + F.length(text))
-                        .cast("int")
-                        .alias("ncol"),
-                    )
-                ),
-            )
-
-        seed = F.array(
-            F.struct(
-                F.lit(1).cast("int").alias("line"),
-                F.lit(1).cast("int").alias("col"),
-                F.lit(1).cast("int").alias("nline"),
-                F.lit(1).cast("int").alias("ncol"),
-            )
-        )
-        safe_spans = F.coalesce(spans, F.array())
-        pos_arr = F.slice(
-            F.aggregate(safe_spans, seed, _pos_step),
-            2,
-            F.greatest(F.size(safe_spans), F.lit(1)),
-        )
-    else:
-        pos_arr = F.transform(
-            F.coalesce(spans, F.array()),
-            lambda s: F.lit(None).cast("struct<line:int,col:int>"),
-        )
     zip_cols = [
         spans.alias("s"),
-        prev_offsets.alias("prev_offset"),
-        pos_arr.alias("p"),
+        shifted(F.col("spans.offset"), "int").alias("prev_offset"),
+        # (line, col) where each span STARTS in the canonical
+        # reconstruction (span texts concatenated in array order) — the
+        # reference Pos contract (error.rs:8-18) at table scale, from the
+        # Arrow-batched UDF over the pruned spans.text array
+        span_start_positions(F.col("spans.text")).alias("p"),
     ]
     if p.check_span_overlap:
         # shifted extent ends (prev offset + char length of prev text) —
-        # same shape as prev_offsets, so S9 needs no window/shuffle either
+        # same shape as prev_offset, so S9 needs no window/shuffle either
         ends = F.transform(
             spans,
             lambda s: s["offset"].cast("long")
             + F.length(F.coalesce(s["text"], F.lit(""))).cast("long"),
         )
-        prev_ends = F.when(
-            F.coalesce(F.size(spans), F.lit(0)) > 0,
-            F.concat(
-                F.array(F.lit(None).cast("long")),
-                F.slice(ends, 1, F.greatest(F.size(spans) - 1, F.lit(0))),
-            ),
-        ).otherwise(F.array().cast("array<long>"))
-        zip_cols.append(prev_ends.alias("prev_end"))
-    zipped = F.arrays_zip(*zip_cols)
+        zip_cols.append(shifted(ends, "long").alias("prev_end"))
     # doc-level scalars (S3/S4 inputs) ride along the explode so the whole
     # pack needs exactly ONE scan and ONE Generate
     n_spans = F.coalesce(F.size(spans), F.lit(0))
@@ -382,60 +437,30 @@ def span_rule_violations(
         "partition",
         "doc_id",
         "spans",
-        n_spans.alias("_n_spans"),
-        total_bytes.alias("_total_bytes"),
+        n_spans.alias("n_spans"),
+        total_bytes.alias("total_bytes"),
     )
     ex = pre.select(
         "partition",
         "doc_id",
-        "_n_spans",
-        "_total_bytes",
-        F.posexplode(zipped).alias("span_pos", "z"),
+        "n_spans",
+        "total_bytes",
+        F.posexplode(F.arrays_zip(*zip_cols)).alias("span_pos", "z"),
     ).select(
         "partition",
         "doc_id",
         "span_pos",
-        "_n_spans",
-        "_total_bytes",
+        "n_spans",
+        "total_bytes",
         F.col("z.s.kind").alias("kind"),
         F.col("z.s.text").alias("text"),
         F.col("z.s.media_ref").alias("media_ref"),
         F.col("z.s.offset").alias("offset"),
         F.col("z.prev_offset").alias("prev_offset"),
-        (
-            F.col("z.prev_end") if p.check_span_overlap else F.lit(None).cast("long")
-        ).alias("prev_end"),
+        *([F.col("z.prev_end").alias("prev_end")] if p.check_span_overlap else []),
         F.col("z.p.line").alias("line"),
         F.col("z.p.col").alias("col"),
     )
-
-    def _item(rule_id, kind, span_pos, offset, line=None, col=None):
-        # deliberately message-free: the item struct carries only small
-        # scalars. Building messages here looks lazy (when(cond, item))
-        # but codegen's common-subexpression elimination hoists the
-        # shared string concats OUT of the lazy branches — measured 2×
-        # on the whole write-shaped pass at 16M docs (string allocation
-        # per exploded row for violations that almost never fire).
-        null_i = F.lit(None).cast("int")
-        return F.struct(
-            F.lit(rule_id).alias("rule_id"),
-            F.lit(kind).alias("kind"),
-            span_pos.cast("int").alias("span_pos"),
-            offset.cast("long").alias("offset"),
-            (line if line is not None else null_i).cast("int").alias("line"),
-            (col if col is not None else null_i).cast("int").alias("col"),
-        )
-
-    checks = [
-        (
-            cond,
-            _item(
-                rule_id, kind, F.col("span_pos"), F.col("offset"),
-                F.col("line"), F.col("col"),
-            ),
-        )
-        for rule_id, kind, cond in _span_checks(p)
-    ]
     if media_catalog is not None:
         # broadcast hash join is a streaming pass over the exploded rows
         # (build side = catalog keys); R1 fires when a non-null media_ref
@@ -444,140 +469,7 @@ def span_rule_violations(
             media_catalog.select("media_ref").distinct().withColumn("_cat_hit", F.lit(True))
         )
         ex = ex.join(cat_keys, "media_ref", "left")
-        checks.append(
-            (
-                F.col("media_ref").isNotNull() & F.col("_cat_hit").isNull(),
-                _item(
-                    "R1",
-                    ErrorKind.DANGLING_MEDIA_REF,
-                    F.col("span_pos"),
-                    F.col("offset"),
-                ),
-            )
-        )
-    # S3/S4 document-level limits fire once per doc, on the first span row
-    # (span_pos/offset null in the emitted violation — the reference's
-    # error-at-opener position lifted to error-at-document); a doc that
-    # could violate them always has at least one span.
-    first = F.col("span_pos") == 0
-    null_i, null_l = F.lit(None).cast("int"), F.lit(None).cast("long")
-    if p.max_spans > 0:
-        checks.append(
-            (
-                first & (F.col("_n_spans") > p.max_spans),
-                _item("S3", ErrorKind.MAX_DEPTH_EXCEEDED, null_i, null_l),
-            )
-        )
-    if p.max_text_bytes > 0:
-        checks.append(
-            (
-                first & (F.col("_total_bytes") > p.max_text_bytes),
-                _item("S4", ErrorKind.MAX_SIZE_EXCEEDED, null_i, null_l),
-            )
-        )
-    viol_arr = F.array_compact(
-        F.array(
-            *[
-                F.when(F.coalesce(cond, F.lit(False)), item).otherwise(F.lit(None))
-                for cond, item in checks
-            ]
-        )
-    )
-    # Pre-filter on "any rule fired" BEFORE the item-array build: the
-    # struct construction, array_compact (a RuntimeReplaceable filter
-    # HOF, interpreted) and the second Generate cost ~2 s per 1M clean
-    # span rows that emit nothing (r6 measurement: viol_arr projection
-    # +0.8 s, its explode +1.3 s). The disjunction re-tests each
-    # predicate once per row — comparisons plus the gated regexes, far
-    # cheaper than building throwaway arrays — and the explode then
-    # runs on actual violations only. Output rows are identical: the
-    # filter keeps exactly the rows whose viol_arr is non-empty.
-    import functools
-    import operator
-
-    fired = functools.reduce(
-        operator.or_, (F.coalesce(cond, F.lit(False)) for cond, _ in checks)
-    )
-    # Explode matched items FIRST, carry the (cheap scalar) message
-    # inputs through, and only THEN build the message strings: after the
-    # filter implied by explode(array_compact(...)), these expressions
-    # run on actual violations only — a vanishing fraction of rows. The
-    # span text does NOT ride through the explode (S5-S7 messages are
-    # constants), so no text bytes move past the scan stage.
-    matched = ex.filter(fired).select(
-        "partition",
-        "doc_id",
-        F.col("kind").alias("_span_kind"),
-        "media_ref",
-        "offset",
-        "prev_offset",
-        "prev_end",
-        "_n_spans",
-        "_total_bytes",
-        F.explode(viol_arr).alias("v"),
-    )
-    kind_str = F.coalesce(F.col("_span_kind"), F.lit("<null>"))
-    message = (
-        F.when(
-            F.col("v.rule_id") == "S1",
-            F.concat(
-                F.lit("offset regression: "),
-                F.col("offset").cast("string"),
-                F.lit(" <= prev "),
-                F.col("prev_offset").cast("string"),
-            ),
-        )
-        .when(
-            F.col("v.rule_id") == "S9",
-            F.concat(
-                F.lit("span overlap: offset "),
-                F.col("offset").cast("string"),
-                F.lit(" < prev end "),
-                F.col("prev_end").cast("string"),
-            ),
-        )
-        .when(F.col("v.rule_id") == "S2", F.concat(F.lit("kind not in domain: "), kind_str))
-        .when(F.col("v.rule_id") == "S5", F.lit("control character in text"))
-        .when(F.col("v.rule_id") == "S6", F.lit("invalid escape sequence"))
-        .when(F.col("v.rule_id") == "S7", F.lit("invalid unicode escape"))
-        .when(
-            F.col("v.rule_id") == "S8",
-            F.when(
-                F.col("_span_kind") == "text", F.lit("expected media_ref=null for kind=text")
-            ).otherwise(F.concat(F.lit("expected media_ref for kind="), kind_str)),
-        )
-        .when(
-            F.col("v.rule_id") == "R1",
-            F.concat(F.lit("dangling media_ref: "), F.col("media_ref")),
-        )
-        .when(
-            F.col("v.rule_id") == "S3",
-            F.concat(
-                F.lit("span count "),
-                F.col("_n_spans").cast("string"),
-                F.lit(f" > max {p.max_spans}"),
-            ),
-        )
-        .when(
-            F.col("v.rule_id") == "S4",
-            F.concat(
-                F.lit("text bytes "),
-                F.col("_total_bytes").cast("string"),
-                F.lit(f" > max {p.max_text_bytes}"),
-            ),
-        )
-    )
-    return matched.select(
-        "partition",
-        "doc_id",
-        F.col("v.rule_id").alias("rule_id"),
-        F.col("v.kind").alias("kind"),
-        F.col("v.span_pos").alias("span_pos"),
-        F.col("v.offset").alias("offset"),
-        F.col("v.line").alias("line"),
-        F.col("v.col").alias("col"),
-        message.cast("string").alias("message"),
-    )
+    return _compile_rules(ex, span_rules(p, fused_ref=media_catalog is not None))
 
 
 # --------------------------------------------------------------------------
@@ -1191,7 +1083,7 @@ class CheckConstraint:
 
 
 _RESERVED_RULE_IDS = frozenset(
-    {"S1", "S2", "S3", "S4", "S5", "S6", "S7", "S8", "U1", "R1", "D1", "M1", "F1"}
+    r.rule_id for r in ALL_RULES + OVERLAP_RULES + MEDIA_RULES + FD_RULES
 )
 
 
@@ -1212,15 +1104,16 @@ def check_constraint_violations(
 ) -> DataFrame:
     """Evaluate user CHECK constraints → violation rows.
 
-    Scale shape: pure map stages — no Exchange, no Python — and ONE
-    scan per level, not one per constraint: all k predicates of a level
-    are evaluated as a per-row array of failing rule indices which is
-    then exploded (the same project-array-then-explode shape the S-pack
-    uses), so k span checks share one posexplode + one Generate and k
-    doc checks share one derived-scalar projection (``total_text_bytes``
-    computed once, not k times). A union of k filtered branches was the
-    first implementation — each branch re-ran its own scan/explode,
-    which is exactly the k-scan cost this formulation avoids.
+    Each constraint becomes a ``DeclaredRule`` row
+    (``violation_sql = NOT coalesce(<pred>, true)``, a constant
+    ``check failed: …`` message, no position) and goes through the same
+    compiler as the built-in span pack. Scale shape: pure map stages — no
+    Exchange, no Python — and ONE scan per level, not one per constraint:
+    k span checks share one posexplode + one Generate and k doc checks
+    share one derived-scalar projection (``total_text_bytes`` computed
+    once, not k times). A union of k filtered branches was the first
+    implementation — each branch re-ran its own scan/explode, which is
+    exactly the k-scan cost this formulation avoids.
 
     A FALSE predicate emits a violation row; NULL passes (ANSI CHECK),
     so authors write ``x IS NOT NULL AND <cond>`` when null itself
@@ -1230,67 +1123,36 @@ def check_constraint_violations(
     position; span-level rows carry (span_pos, offset) like R1/F1.
     """
     _validate_checks(checks)
-    doc_checks = [c for c in checks if c.level == "doc"]
-    span_checks = [c for c in checks if c.level == "span"]
+    rules = {
+        level: [
+            DeclaredRule(
+                c.rule_id, ErrorKind.CHECK_FAILED, c.level, c.description,
+                # newlines keep a trailing `--` comment in the predicate
+                # from swallowing the closing parenthesis
+                f"NOT coalesce((\n{c.predicate}\n), true)",
+                _sql_str(f"check failed: {c.description or c.predicate}"),
+                False,
+            )
+            for c in checks
+            if c.level == level
+        ]
+        for level in ("doc", "span")
+    }
     parts: list[DataFrame] = []
-
-    def _fails(cs: list[CheckConstraint]):
-        # per-row array of the indices whose predicate is definite FALSE
-        return F.filter(
-            F.array(*[
-                F.when(~F.coalesce(F.expr(c.predicate), F.lit(True)), F.lit(i)).otherwise(
-                    F.lit(None).cast("int")
-                )
-                for i, c in enumerate(cs)
-            ]),
-            lambda x: x.isNotNull(),
-        )
-
-    def _attrs(cs: list[CheckConstraint], idx: Column):
-        # rule_id / message literals selected by the failing index —
-        # element_at is 1-based
-        rid = F.element_at(F.array(*[F.lit(c.rule_id) for c in cs]), idx + 1)
-        msg = F.element_at(
-            F.array(*[F.lit(f"check failed: {c.description or c.predicate}") for c in cs]),
-            idx + 1,
-        )
-        return rid, msg
-
-    def _rows(base: DataFrame, cs: list[CheckConstraint], span_pos, offset) -> DataFrame:
-        ex = base.select(
-            "partition", "doc_id",
-            *( [span_pos.cast("int").alias("_sp"), offset.cast("long").alias("_off")] ),
-            F.explode(_fails(cs)).alias("_ci"),
-        )
-        rid, msg = _attrs(cs, F.col("_ci"))
-        return ex.select(
-            "partition",
-            "doc_id",
-            rid.alias("rule_id"),
-            F.lit(ErrorKind.CHECK_FAILED).alias("kind"),
-            F.col("_sp").alias("span_pos"),
-            F.col("_off").alias("offset"),
-            F.lit(None).cast("int").alias("line"),
-            F.lit(None).cast("int").alias("col"),
-            msg.alias("message"),
-        )
-
-    if doc_checks:
-        spans = F.coalesce(F.col("spans"), F.array())
+    if rules["doc"]:
         base = docs.select(
             "partition",
             "doc_id",
             "spans",
             F.size(F.col("spans")).alias("n_spans"),  # null spans -> null (predicate sees SQL null)
             F.aggregate(
-                spans,
+                F.coalesce(F.col("spans"), F.array()),
                 F.lit(0).cast("long"),
                 lambda a, s: a + F.coalesce(F.octet_length(s["text"]), F.lit(0)),
             ).alias("total_text_bytes"),
         )
-        parts.append(_rows(base, doc_checks, F.lit(None).cast("int"), F.lit(None).cast("long")))
-
-    if span_checks:
+        parts.append(_compile_rules(base, rules["doc"]))
+    if rules["span"]:
         ex = docs.select(
             "partition",
             "doc_id",
@@ -1306,7 +1168,7 @@ def check_constraint_violations(
             F.col("s.media_ref").alias("media_ref"),
             F.col("s.offset").cast("long").alias("offset"),
         )
-        parts.append(_rows(ex, span_checks, F.col("span_pos"), F.col("offset")))
+        parts.append(_compile_rules(ex, rules["span"]))
 
     if not parts:
         from zparse_spark.schema import VIOLATION_SCHEMA
