@@ -443,7 +443,13 @@ def test_cli_checksum_flag(tmp_path, spark):
 def test_cli_text_audit_and_exemplars_flags(tmp_path, spark):
     """X149: --text-audit writes the three text-audit sinks over the
     rendered training text; --exemplars N writes bounded deterministic
-    example violations per (partition, rule) cell."""
+    example violations per (partition, rule) cell. After a rerun under
+    changed rules, exemplars and the Markdown report read exactly the
+    rows the verdict grid counts (this rules_hash only, table-rule sink
+    included), and "resumed past" counts partitions committed under
+    this run's rules_hash."""
+    import itertools
+    import os
     import subprocess
     import sys as _sys
 
@@ -457,18 +463,27 @@ def test_cli_text_audit_and_exemplars_flags(tmp_path, spark):
             ("d1", [("text", "login to pаypal now", None, 5),
                     ("text", "the and is of", None, 0)], "p0"),
             ("d2", [("text", "plain ascii here", None, 0)], "p0"),
+            # cross-partition duplicate id -> one U1 row in each partition
+            ("d2", [("text", "plain ascii here", None, 0)], "p1"),
         ],
     )
     dpath = str(tmp_path / "docs")
     docs.write.parquet(dpath)
     out = str(tmp_path / "out")
-    r = subprocess.run(
-        [_sys.executable, "/root/repo/validate.py",
-         "--documents", dpath, "--out", out,
-         "--text-audit", "--exemplars", "2", "--master", "local[2]"],
-        capture_output=True, text=True, timeout=600,
-    )
-    assert r.returncode in (0, 1), r.stderr[-2000:]
+    report = str(tmp_path / "report.md")
+    validate_py = os.path.join(os.path.dirname(os.path.dirname(__file__)), "validate.py")
+
+    def cli(*flags):
+        r = subprocess.run(
+            [_sys.executable, validate_py,
+             "--documents", dpath, "--out", out,
+             "--text-audit", "--exemplars", "2", "--master", "local[2]", *flags],
+            capture_output=True, text=True, timeout=600,
+        )
+        assert r.returncode in (0, 1), r.stderr[-2000:]
+        return r.stdout
+
+    assert "validated partitions: 2 (resumed past 0)" in cli()
     ms = duckdb.sql(
         f"SELECT partition, n_mixed FROM read_parquet('{out}/text_audits/mixed_script/*.parquet')"
     ).fetchall()
@@ -483,6 +498,31 @@ def test_cli_text_audit_and_exemplars_flags(tmp_path, spark):
     ).fetchall()
     assert ex and all(rk <= 2 for _, rk, _ in ex)
     assert any(rule == "S1" for rule, _, _ in ex)
+
+    # changed rules: both partitions re-validate under a new rules_hash,
+    # and the old hash's rows stay on disk in their own namespace
+    rerun = ("--check-span-overlap", "--report-md", report)
+    assert "validated partitions: 2 (resumed past 0)" in cli(*rerun)
+    grid = dict(
+        ((p, rule), n)
+        for p, rule, n in duckdb.sql(
+            f"SELECT partition, rule_id, violation_count "
+            f"FROM read_parquet('{out}/verdicts/*.parquet') WHERE NOT passed"
+        ).fetchall()
+    )
+    cells = duckdb.sql(
+        f"SELECT DISTINCT partition, rule_id, n_total "
+        f"FROM read_parquet('{out}/exemplars/*.parquet')"
+    ).fetchall()
+    assert {(p, rule): n for p, rule, n in cells} == grid
+    assert grid[("p0", "S1")] == 1
+    assert grid[("p0", "U1")] == grid[("p1", "U1")] == 1
+    with open(report) as fh:
+        md = fh.read()
+    lines = md.splitlines()
+    after = lines[lines.index("- **S1** @ `p0` — 1 violation(s)") + 1:]
+    assert len(list(itertools.takewhile(lambda ln: ln.startswith("  - "), after))) == 1
+    assert "validated partitions: 0 (resumed past 2)" in cli(*rerun)
 
 
 def test_expectation_suite_verdicts_and_contract(spark):

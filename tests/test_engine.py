@@ -167,6 +167,59 @@ def test_auto_probe_does_bounded_work_on_huge_catalog(spark):
     assert "SortMergeJoin" in plan  # fell back, did not fuse/broadcast
 
 
+def test_r1_fused_and_standalone_smj_agree(spark):
+    """The engine picks one of two R1 shapes from the catalog probe:
+    fused into the span stage (catalog under broadcast_max_catalog_rows)
+    or the standalone sort-merge anti-join (threshold -1, below any
+    catalog's size: an empty catalog passes a threshold of 0). Both must
+    emit the same R1 rows, including for an empty catalog where every
+    ref dangles."""
+    from tests.conftest import make_docs
+
+    docs = make_docs(
+        spark,
+        [
+            ("d1", [("text", "hi", None, 0), ("image", "", "media_00001", 2)], "p0"),
+            ("d2", [("image", "", "ghost", 0), ("audio", "", "media_00002", 1)], "p0"),
+            ("d3", [("video", "", "ghost", 0)], "p1"),
+        ],
+    )
+    cat = spark.range(10).selectExpr(
+        "concat('media_', lpad(CAST(id AS STRING), 5, '0')) AS media_ref"
+    )
+
+    def r1(catalog, threshold):
+        eng = ValidationEngine(
+            ValidationConfig(
+                enable_uniqueness=False, enable_drift=False,
+                broadcast_max_catalog_rows=threshold,
+            )
+        )
+        viol = eng.violations(docs, catalog).filter("rule_id = 'R1'")
+        plan = viol._jdf.queryExecution().executedPlan().toString()
+        return sorted(tuple(r) for r in viol.collect()), "SortMergeJoin" in plan
+
+    fused, fused_smj = r1(cat, 1_000_000)
+    standalone, standalone_smj = r1(cat, -1)
+    assert fused == standalone and len(fused) == 2
+    assert not fused_smj and standalone_smj
+    # over an empty catalog the optimizer drops the anti-join either way
+    empty = cat.filter("false")
+    fused, _ = r1(empty, 1_000_000)
+    standalone, _ = r1(empty, -1)
+    assert fused == standalone and len(fused) == 4
+
+
+def test_rules_hash_pinned():
+    """rules_hash keys the resume manifest: a change re-validates every
+    committed partition, so its value is pinned."""
+    assert ValidationConfig().rules_hash() == "470f0255eda4dab5"
+    assert (
+        ValidationConfig(enable_media_decode=True, broadcast_max_catalog_rows=256).rules_hash()
+        == "537e7a7c1d18ecd2"
+    )
+
+
 def test_verdict_diff_statuses(spark):
     """All five diff statuses from hand-built verdict matrices."""
     from zparse_spark.plans.engine import verdict_diff

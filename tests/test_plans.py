@@ -442,31 +442,18 @@ def test_session_continuation_ops_plan_discipline(spark, docs_path):
     assert "EvalPython" not in p
 
 
-def test_bloom_wor_rrf_plan_discipline(spark, docs_path):
+def test_wor_rrf_plan_discipline(spark, docs_path):
     """The newest operators keep the plan shapes their docstrings claim:
-    Bloom probe = broadcast hash joins only (the pruned side is never
-    shuffled, never hits Python); weighted WOR without strata compiles
-    to TakeOrdered (partial per-partition top-n), with strata to a
-    window over hashpartitioning on the stratum — never a global sort
-    of the corpus; RRF fusion never touches more than the bounded
-    top-k inputs and stays Python-free."""
+    weighted WOR without strata compiles to TakeOrdered (partial
+    per-partition top-n), with strata to a window over hashpartitioning
+    on the stratum — never a global sort of the corpus; RRF fusion never
+    touches more than the bounded top-k inputs and stays Python-free."""
     from zparse_spark.functions.text import rrf_fuse
     from zparse_spark.operators.filtering import weighted_sample_wor
-    from zparse_spark.operators.rules import bloom_bitmap, bloom_prune
 
     docs = spark.read.parquet(docs_path).select(
         "doc_id", F.col("partition").alias("part")
     )
-
-    keys = docs.select(F.col("doc_id").alias("k")).limit(50)
-    bm = bloom_bitmap(keys, "k", n_words=64, n_hashes=3)
-    p = plan_of(bloom_prune(docs.select(F.col("doc_id").alias("k")), "k", bm, 64, 3))
-    assert "EvalPython" not in p
-    assert "BroadcastHashJoin" in p
-    # the pruned (big) side must not be exchanged for the probe: every
-    # Exchange in the plan is a broadcast or feeds the tiny bitmap agg,
-    # never a hashpartitioning of the probed stream by the probe keys
-    assert "SortMergeJoin" not in p and "ShuffledHashJoin" not in p
 
     wor = weighted_sample_wor(
         docs.withColumn("w", F.length("part").cast("long") + 1), 10, "w"

@@ -177,18 +177,30 @@ def test_r1_referential(spark):
         [
             ("ok", [T("a", 0), M("known", 1)], "p0"),
             ("bad", [T("a", 0), M("ghost", 1)], "p0"),
+            ("bad2", [M("ghost2", 0)], "p1"),
         ],
     )
     cat = spark.createDataFrame([("known", "image", 10)], ["media_ref", "media_kind", "bytes"])
-    for strategy in ("auto", "broadcast", "smj", "distinct"):
-        got = rows(referential_violations(docs, cat, strategy))
-        assert got == [("bad", "R1", "DanglingMediaRef", 1, 1)], strategy
-    # distinct-strategy broadcast guard: when the dangling set exceeds
-    # the budget (forced here with max=0 — the wrong/empty-catalog regime
-    # where most refs dangle) the op falls back to the plain anti-join
-    # instead of force-broadcasting an unbounded set; output identical
-    got = rows(referential_violations(docs, cat, "distinct", distinct_broadcast_max=0))
-    assert got == [("bad", "R1", "DanglingMediaRef", 1, 1)]
+    # empty catalog: every ref dangles; wrong catalog: zero overlap with
+    # the refs, so every ref dangles too
+    empty = cat.filter(F.lit(False))
+    wrong = spark.range(64).selectExpr("concat('w', id) AS media_ref")
+    every_ref = [
+        ("bad", "R1", "DanglingMediaRef", 1, 1),
+        ("bad2", "R1", "DanglingMediaRef", 0, 0),
+        ("ok", "R1", "DanglingMediaRef", 1, 1),
+    ]
+    cases = [
+        (cat, [("bad", "R1", "DanglingMediaRef", 1, 1), ("bad2", "R1", "DanglingMediaRef", 0, 0)]),
+        (empty, every_ref),
+        (wrong, every_ref),
+    ]
+    for catalog, want in cases:
+        for strategy in ("auto", "broadcast", "smj"):
+            assert rows(referential_violations(docs, catalog, strategy)) == want, strategy
+    # a removed strategy must fail loudly, not fall through to a plain join
+    with pytest.raises(ValueError, match="unknown strategy"):
+        referential_violations(docs, cat, "distinct")
 
 
 def test_d1_drift(spark):

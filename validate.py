@@ -50,7 +50,6 @@ def main(argv: list[str] | None = None) -> int:
                          "S2/S8 drops, S8/S5 fixes, canonical sort, S3 truncation, "
                          "compact reindex — S4/S6/S7 have no canonical fix and stay "
                          "quarantine material")
-    ap.add_argument("--referential-strategy", choices=["auto", "broadcast", "smj"], default="auto")
     ap.add_argument("--media-kind-fd", action="store_true",
                     help="enable F1: the same media_ref must carry the same span kind "
                          "table-wide (catalog/referent agreement; changes rules_hash)")
@@ -157,7 +156,6 @@ def main(argv: list[str] | None = None) -> int:
     engine = ValidationEngine(
         ValidationConfig(
             params=params,
-            referential_strategy=args.referential_strategy,
             enable_referential=args.catalog is not None,
             enable_media_decode=args.media is not None,
             media_check_missing=not args.media_no_check_missing,
@@ -234,14 +232,15 @@ def main(argv: list[str] | None = None) -> int:
     if args.junit_xml or args.report_md:
         from zparse_spark.plans.report import junit_xml, markdown_report
 
+        # the same violation rows the verdict grid counts: this run's
+        # rules_hash only, table-rule sink included, waived rows excluded
         viol_back = spark.read.parquet(f"{args.out}/verdicts")
-        viol_rows = spark.read.parquet(f"{args.out}/violations")
         if args.junit_xml:
             with open(args.junit_xml, "w") as fh:
-                fh.write(junit_xml(viol_back, viol_rows))
+                fh.write(junit_xml(viol_back, viol))
         if args.report_md:
             with open(args.report_md, "w") as fh:
-                fh.write(markdown_report(viol_back, viol_rows))
+                fh.write(markdown_report(viol_back, viol))
 
     if args.emit_contract:
         from pyspark.sql import functions as F  # noqa: F811
@@ -296,8 +295,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.exemplars > 0:
         from zparse_spark.operators.rules import violation_exemplars
 
-        viol_rows = spark.read.parquet(f"{args.out}/violations")
-        violation_exemplars(viol_rows, n=args.exemplars).write.mode(
+        violation_exemplars(viol, n=args.exemplars).write.mode(
             "overwrite"
         ).parquet(f"{args.out}/exemplars")
 
@@ -374,7 +372,8 @@ def main(argv: list[str] | None = None) -> int:
     # the whole verdict grid (docs scan included) a third time
     rollup_back = spark.read.parquet(f"{args.out}/partition_verdicts")
     n_error_cells = rollup_back.agg(F.sum("n_error_cells")).collect()[0][0] or 0
-    print(f"validated partitions: {len(done)} (resumed past {Manifest(args.out)._read_rows().__len__() - len(done)})")
+    resumed = manifest.committed_partitions(spark, engine.config.rules_hash()) - set(done)
+    print(f"validated partitions: {len(done)} (resumed past {len(resumed)})")
     print(f"violations: {n_viol}; failing (partition, rule) cells: {n_fail}"
           f" ({n_error_cells} error-severity)"
           + (f"; waived: {n_waived}" if args.waivers else "")

@@ -530,34 +530,21 @@ def referential_violations(
     docs: DataFrame,
     media_catalog: DataFrame,
     strategy: str = "auto",
-    distinct_broadcast_max: int = 1_000_000,
 ) -> DataFrame:
     """R1: every non-null spans.media_ref must exist in the catalog
     (referential pairing generalizing xml/parser.rs:125-134).
 
     Scale shape: prune the array *before* exploding — only media spans
     (sparse) are generated, so the explode output is a fraction of total
-    spans. The anti-join is broadcast when the catalog fits
-    (``strategy='broadcast'`` forces it; 'auto' lets AQE decide; 'smj'
-    hints shuffle merge for a catalog too big to broadcast).
-
-    ``strategy='distinct'`` is the shape for the BIG-catalog × BIG-docs
-    regime where the SMJ shuffles every ref *occurrence*: anti-join the
-    catalog against the DISTINCT ref values first (shuffle volume drops
-    from occurrences to distinct values — partial-distinct combines
-    map-side, and media refs repeat heavily in real corpora), producing
-    the dangling-ref SET, which is violation-sparse and therefore tiny;
-    broadcast-join that set back onto the occurrence stream (map-only).
-    Output is exactly the single-phase anti-join's — the rewrite is an
-    algebraic identity (anti-join distributes over the distinct because
-    membership depends only on the key).
-
-    ``strategy='bloom'`` is 'distinct' plus an exact Bloom prune of the
-    catalog side first (see ``bloom_prune``): the giant catalog is cut
-    to ~the refs actually used before it ever reaches an exchange —
-    the shape for catalogs orders of magnitude wider than any one
-    table's ref domain (a global media store serving many corpora).
+    spans — then one anti-join against the distinct catalog keys.
+    ``strategy='broadcast'`` forces a broadcast of the catalog, 'smj'
+    hints a shuffle merge for a catalog too big to broadcast, and 'auto'
+    lets AQE decide. ``ValidationEngine`` runs this standalone form only
+    as 'smj': a catalog small enough to broadcast is fused into the span
+    stage instead (``span_rule_violations(media_catalog=...)``).
     """
+    if strategy not in ("auto", "broadcast", "smj"):
+        raise ValueError(f"unknown strategy {strategy!r}")
     # GetArrayStructFields projections (spans.media_ref / spans.offset)
     # are visible to nested-schema pruning, so the parquet scan reads ONLY
     # those two subfields — a HOF over F.col("spans") would force the
@@ -582,44 +569,7 @@ def referential_violations(
         cat = F.broadcast(cat)
     elif strategy == "smj":
         cat = cat.hint("merge")
-    if strategy == "bloom":
-        # EXACT probe-side catalog pruning for the 10^9-row-catalog
-        # regime: build a Bloom bitmap over the DISTINCT refs actually
-        # used (one agg, ≤n_words rows), then drop catalog rows whose
-        # key misses it BEFORE any join — no false negatives means
-        # every catalog row that matches some ref survives, so the
-        # anti-join result is unchanged; what changes is that the
-        # catalog side of the exchange shrinks from |catalog| to
-        # ~|used refs| (+FP). The surviving two-phase below then runs
-        # on the pruned side. This is what Spark's runtime Bloom join
-        # would do for us if it fired for anti-joins (it does not).
-        distinct_refs = refs.select("media_ref").distinct()
-        cat = bloom_prune(
-            cat, "media_ref", bloom_bitmap(distinct_refs, "media_ref")
-        )
-        strategy = "distinct"
-    if strategy == "distinct":
-        dangling_set = refs.select("media_ref").distinct().join(
-            cat, "media_ref", "left_anti"
-        )
-        # the forced broadcast rides on the sparsity ASSUMPTION that
-        # dangling refs are rare; when it fails (wrong/empty catalog →
-        # most refs dangling) a forced broadcast OOMs the driver at the
-        # scale this path targets, turning a data problem into a job
-        # failure. Probe with limit(max+1).count() — bounded either way,
-        # the scan stops after max+1 rows — and fall back to the plain
-        # occurrence anti-join when the set exceeds the broadcast budget
-        # (in the catastrophic regime the two-phase rewrite saves
-        # nothing anyway: the dangling set ≈ the distinct refs).
-        if (
-            dangling_set.limit(distinct_broadcast_max + 1).count()
-            <= distinct_broadcast_max
-        ):
-            dangling = refs.join(F.broadcast(dangling_set), "media_ref", "left_semi")
-        else:
-            dangling = refs.join(cat, "media_ref", "left_anti")
-    else:
-        dangling = refs.join(cat, "media_ref", "left_anti")
+    dangling = refs.join(cat, "media_ref", "left_anti")
     return dangling.select(
         "partition",
         "doc_id",
@@ -633,95 +583,6 @@ def referential_violations(
         F.lit(None).cast("int").alias("col"),
         F.concat(F.lit("dangling media_ref: "), F.col("media_ref")).alias("message"),
     )
-
-
-def bloom_bitmap(
-    keys: DataFrame, key_col: str, n_words: int = 4096, n_hashes: int = 5
-) -> DataFrame:
-    """Mergeable Bloom bitmap over a key column as a ≤``n_words``-row
-    table ``(word_idx int, word long)`` — 64 bits per word, ``n_hashes``
-    bits set per key via ``xxhash64(key, i)`` for i in 0..n_hashes-1
-    (the two-argument form hashes the (key, i) tuple, so the i-th probe
-    is an independent hash family member; both build and probe spell
-    the IDENTICAL SQL expression, so the bit positions agree by
-    construction).
-
-    Scale shape: ONE scan of the key set with a k-way explode, then a
-    groupBy(word_idx) + bit_or — map-side partial bit_or collapses each
-    task's contribution to ≤ n_words rows before the shuffle, so the
-    exchange carries at most n_words × tasks tiny rows no matter how
-    many keys went in. The result is a TABLE (not a driver value): it
-    merges across incremental builds with another bit_or, and it
-    broadcasts (n_words=4096 → 32 KB; even 2^22 words → 32 MB fits the
-    default broadcast budget) — the property ``bloom_prune`` rides."""
-    m = n_words * 64
-    probes = F.array(
-        *[
-            F.struct(
-                F.expr(
-                    f"CAST(pmod(xxhash64({key_col}, {i}), {m}) DIV 64 AS INT)"
-                ).alias("w"),
-                F.expr(
-                    f"shiftleft(CAST(1 AS BIGINT), "
-                    f"CAST(pmod(xxhash64({key_col}, {i}), {m}) % 64 AS INT))"
-                ).alias("b"),
-            )
-            for i in range(n_hashes)
-        ]
-    )
-    return (
-        keys.select(F.explode(probes).alias("x"))
-        .select(F.col("x.w").alias("word_idx"), F.col("x.b").alias("mask"))
-        .groupBy("word_idx")
-        .agg(F.bit_or("mask").alias("word"))
-    )
-
-
-def bloom_prune(
-    df: DataFrame,
-    key_col: str,
-    bitmap: DataFrame,
-    n_words: int = 4096,
-    n_hashes: int = 5,
-) -> DataFrame:
-    """Keep only rows whose key MIGHT be in the set the bitmap was built
-    over — Bloom filters have NO false negatives, so every row whose key
-    IS in the set survives; false positives only cost bytes downstream.
-    This makes the prune EXACT for join work: filtering the non-probe
-    side of an equi/semi/anti join by a Bloom of the probe side's keys
-    never changes the join result (rows dropped here match nothing).
-
-    The probe is ``n_hashes`` broadcast hash joins of the ≤n_words-row
-    bitmap (word lookup) plus a codegen bit test — map-only, no shuffle
-    of ``df``, no driver collect, no Python. This is the engine-level
-    form of Spark's runtime row-level Bloom join (which does not fire
-    for anti-joins); n_words scales to the key cardinality (~10 bits/key
-    for ~1% FP at k=5) bounded only by the broadcast budget."""
-    m = n_words * 64
-    out = df
-    keep = F.lit(True)
-    tmp = []
-    for i in range(n_hashes):
-        wi, wv = f"__bloom_w{i}", f"__bloom_v{i}"
-        tmp += [wi, wv]
-        out = out.withColumn(
-            wi, F.expr(f"CAST(pmod(xxhash64({key_col}, {i}), {m}) DIV 64 AS INT)")
-        ).join(
-            F.broadcast(
-                bitmap.select(
-                    F.col("word_idx").alias(f"__bm_w{i}"),
-                    F.col("word").alias(wv),
-                )
-            ),
-            F.col(wi) == F.col(f"__bm_w{i}"),
-            "left",
-        ).drop(f"__bm_w{i}")
-        mask = F.expr(
-            f"shiftleft(CAST(1 AS BIGINT), "
-            f"CAST(pmod(xxhash64({key_col}, {i}), {m}) % 64 AS INT))"
-        )
-        keep = keep & F.col(wv).isNotNull() & (F.col(wv).bitwiseAND(mask) != 0)
-    return out.filter(keep).drop(*tmp)
 
 
 def media_payload_violations(
@@ -1001,11 +862,11 @@ def media_kind_consistency_violations(
     back to every offending occurrence so the output keys by
     (partition, doc_id, rule_id) like every other rule.
 
-    Scale shape mirrors R1's 'distinct' strategy: nested-pruned
-    projection of (media_ref, kind, offset) only — no text bytes through
-    the scan — then the FD core runs on distinct (ref, kind) pairs and
-    the violating-ref set (violation-sparse, carries the preformatted
-    variant list) broadcasts back onto the occurrence stream map-only.
+    Scale shape: nested-pruned projection of (media_ref, kind, offset)
+    only — no text bytes through the scan — then the FD core runs on
+    distinct (ref, kind) pairs and the violating-ref set (violation-
+    sparse, carries the preformatted variant list) broadcasts back onto
+    the occurrence stream map-only.
     line/col are null by design: deriving them would drag every text
     byte through this branch's scan (same trade as R1).
     """

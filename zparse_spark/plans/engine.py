@@ -1,8 +1,9 @@
 """ValidationEngine — composes the rule pack into one Catalyst DAG.
 
-Lifecycle (SURVEY.md §3.4): read documents → span/doc rules (map-only) ∪
-uniqueness (single-phase count agg, map-side combine) ∪ referential
-(pruned explode + broadcast anti-join) ∪ drift (two small aggs) →
+Lifecycle (SURVEY.md §3.4): read documents → span/doc rules (map-only,
+with referential fused in when the catalog broadcasts) ∪ uniqueness
+(single-phase count agg, map-side combine) ∪ referential (pruned explode
++ sort-merge anti-join, big catalogs only) ∪ drift (two small aggs) →
 violations table → verdict matrix. One pass over the input; the four branches share the
 scan (Spark reuses the exchange under AQE where possible, and the input
 is columnar parquet/Iceberg so each branch prunes to the columns it
@@ -17,6 +18,7 @@ parse, every fixtures/invalid/* must fail
 from __future__ import annotations
 
 import hashlib
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,7 +42,6 @@ from zparse_spark.operators.rules import (
 @dataclass(frozen=True)
 class ValidationConfig:
     params: RuleParams = field(default_factory=RuleParams)
-    referential_strategy: str = "auto"  # 'auto' | 'broadcast' | 'smj'
     enable_uniqueness: bool = True
     enable_referential: bool = True
     enable_drift: bool = True
@@ -62,9 +63,10 @@ class ValidationConfig:
     # like span rules (evaluated on pending partitions only). Predicates
     # are part of rules_hash — editing a check invalidates resume state.
     check_constraints: tuple[CheckConstraint, ...] = ()
-    # 'auto' fuses R1 into the span explode only when the catalog key set
-    # is provably under this row count (cheap count probe here; table
-    # metadata on a real Iceberg catalog) — an unconditionally forced
+    # R1 fuses into the span explode only when the catalog key set is
+    # provably under this row count (cheap count probe here; table
+    # metadata on a real Iceberg catalog) and otherwise runs as a
+    # standalone sort-merge anti-join — an unconditionally forced
     # broadcast would OOM the driver at the 10^12-doc design point
     broadcast_max_catalog_rows: int = 1_000_000
 
@@ -72,12 +74,33 @@ class ValidationConfig:
         """Stable hash of the active rule pack + params — stamped into the
         manifest so resume only skips partitions validated under the SAME
         rules (SURVEY.md §4.3)."""
-        payload = repr((self.params, self.referential_strategy, self.enable_uniqueness,
+        # "auto": the removed referential_strategy's default, kept so older manifests still resume
+        payload = repr((self.params, "auto", self.enable_uniqueness,
                         self.enable_referential, self.enable_drift,
                         self.enable_media_decode, self.media_check_missing,
                         self.enable_media_kind_fd, self.check_constraints,
                         sorted(r.rule_id for r in ALL_RULES))).encode()
         return hashlib.sha256(payload).hexdigest()[:16]
+
+
+def _table_rules(c: ValidationConfig) -> dict[str, Callable[[DataFrame], DataFrame]]:
+    """rule_id → violations function of each enabled table-wide rule:
+    the rules that are NOT partition-decomposable. They always see the
+    full table (re-run in full on every resume) and cannot be estimated
+    from a document sample."""
+    rules = {
+        "U1": (c.enable_uniqueness, uniqueness_violations),
+        "D1": (c.enable_drift, lambda docs: drift_violations(docs, c.params)),
+        "F1": (c.enable_media_kind_fd, media_kind_consistency_violations),
+    }
+    return {rule_id: fn for rule_id, (on, fn) in rules.items() if on}
+
+
+def _union_all(parts: list[DataFrame]) -> DataFrame:
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
 
 
 @dataclass
@@ -104,9 +127,10 @@ class ValidationEngine:
         media_verdicts: DataFrame | None = None,
     ) -> DataFrame:
         """All enabled rules over ``docs``. ``include_table_rules=False``
-        restricts to the partition-decomposable rules (span/doc + R1) —
-        the resumable runner evaluates those on pending partitions only
-        while re-running U1/D1 table-wide (see plans.manifest)."""
+        restricts to the partition-decomposable rules (span/doc, R1, M1,
+        K) — the resumable runner evaluates those on pending partitions
+        only while re-running the table-wide rules (``_table_rules``) over
+        the full table (see plans.manifest)."""
         c = self.config
         if c.enable_media_decode and media_verdicts is None:
             # never skip silently: the dense verdict grid would show M1
@@ -118,71 +142,49 @@ class ValidationEngine:
                 "decode_verdicts(payloads) (zparse_spark.multimodal) or build "
                 "the engine with enable_media_decode=False"
             )
-        # R1 fuses into the span-rule explode (one scan saved) when the
-        # catalog is provably broadcastable: always for
-        # strategy='broadcast' (caller vouches), for 'auto' only when a
-        # count probe confirms the key set is under the threshold —
-        # otherwise the standalone SMJ branch takes over. The probe is
-        # limit(threshold+1).count(), NOT count(): deciding NOT to
-        # broadcast a 10^9-row catalog must not cost a full catalog scan
-        # — the limit stops the scan after threshold+1 rows either way
-        # (on a real Iceberg catalog, table metadata answers this for
-        # free; the bounded probe is the storage-agnostic fallback).
-        fuse_ref = c.enable_referential and media_catalog is not None and (
-            c.referential_strategy == "broadcast"
-            or (
-                c.referential_strategy == "auto"
-                and media_catalog.limit(c.broadcast_max_catalog_rows + 1).count()
-                <= c.broadcast_max_catalog_rows
-            )
+        # R1 fuses into the span-rule explode (one scan saved) when a
+        # count probe shows the catalog key set is under
+        # broadcast_max_catalog_rows; otherwise it runs as the standalone
+        # sort-merge anti-join. The probe is limit(threshold+1).count(),
+        # NOT count(): deciding NOT to broadcast a 10^9-row catalog must
+        # not cost a full catalog scan — the limit stops the scan after
+        # threshold+1 rows either way (on a real Iceberg catalog, table
+        # metadata answers this for free; the bounded probe is the
+        # storage-agnostic fallback).
+        ref_on = c.enable_referential and media_catalog is not None
+        fuse_ref = ref_on and (
+            media_catalog.limit(c.broadcast_max_catalog_rows + 1).count()
+            <= c.broadcast_max_catalog_rows
         )
         parts = [
             span_rule_violations(docs, c.params, media_catalog=media_catalog if fuse_ref else None)
         ]
-        if c.enable_uniqueness and include_table_rules:
-            parts.append(uniqueness_violations(docs))
-        if c.enable_referential and media_catalog is not None and not fuse_ref:
-            strategy = "smj" if c.referential_strategy == "auto" else c.referential_strategy
-            parts.append(referential_violations(docs, media_catalog, strategy))
-        if c.enable_drift and include_table_rules:
-            parts.append(drift_violations(docs, c.params))
+        if ref_on and not fuse_ref:
+            parts.append(referential_violations(docs, media_catalog, "smj"))
         if c.enable_media_decode:
             parts.append(
                 media_payload_violations(
                     docs, media_verdicts, check_missing=c.media_check_missing
                 )
             )
-        if c.enable_media_kind_fd and include_table_rules:
-            parts.append(media_kind_consistency_violations(docs))
         if c.check_constraints:
             # partition-decomposable (pure map) — evaluated on pending
             # partitions in resumed runs, like the span rules
             parts.append(check_constraint_violations(docs, c.check_constraints))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        if include_table_rules:
+            parts += [fn(docs) for fn in _table_rules(c).values()]
+        return _union_all(parts)
 
     def table_violations(self, docs: DataFrame) -> DataFrame:
-        """Only the table-wide rules (U1 uniqueness, D1 drift) — the ones
-        that are NOT partition-decomposable and must always see the full
-        table, even on a resumed run."""
+        """Only the table-wide rules (U1 uniqueness, D1 drift, F1 media
+        kind) — the ones that are NOT partition-decomposable and must
+        always see the full table, even on a resumed run."""
         from zparse_spark.schema import VIOLATION_SCHEMA
 
-        c = self.config
-        parts = []
-        if c.enable_uniqueness:
-            parts.append(uniqueness_violations(docs))
-        if c.enable_drift:
-            parts.append(drift_violations(docs, c.params))
-        if c.enable_media_kind_fd:
-            parts.append(media_kind_consistency_violations(docs))
+        parts = [fn(docs) for fn in _table_rules(self.config).values()]
         if not parts:
             return docs.sparkSession.createDataFrame([], VIOLATION_SCHEMA)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return _union_all(parts)
 
     def active_rule_ids(self) -> list[str]:
         """Rule ids this configuration actually evaluates — the single
@@ -405,7 +407,7 @@ def sampled_validation(
     key = F.concat_ws("|", F.col("partition"), F.col("doc_id"))
     sample = docs.filter(hash_unit(key, seed) < fraction)
     viol = engine.violations(sample, media_catalog, include_table_rules=False)
-    table_only = {"U1", "D1", "F1"}
+    table_only = _table_rules(engine.config)
     rules = [r for r in engine.active_rule_ids() if r not in table_only]
     spark = docs.sparkSession
     rules_df = spark.range(1).select(

@@ -271,16 +271,15 @@ FROM sp
 WHERE media_ref IS NOT NULL AND media_ref NOT IN (SELECT media_ref FROM cat)""",
 )
 def span_pack_referential_distinct(spark, sf_dir):
-    """R1 via the two-phase distinct-ref rewrite (anti-join on DISTINCT
-    ref values → broadcast the sparse dangling SET back onto the
-    occurrence stream) — the shape for the big-catalog × big-docs
-    regime where the single-phase SMJ would shuffle every occurrence.
-    The rewrite is an algebraic identity, so the SAME R1 oracle branch
-    must match row-for-row."""
+    """R1 as the standalone sort-merge anti-join (strategy 'smj') — the
+    shape ``ValidationEngine`` runs when the catalog is over
+    ``broadcast_max_catalog_rows`` (the resume benchmark reaches it by
+    lowering that threshold); the SAME R1 oracle branch must match
+    row-for-row. The name is kept for outside drivers of the registry."""
     from zparse_spark.operators.rules import referential_violations
 
     docs, cat = _pack_input(spark)
-    return referential_violations(docs, cat, strategy="distinct")
+    return referential_violations(docs, cat, "smj")
 
 
 @register(
@@ -293,17 +292,11 @@ FROM sp
 WHERE media_ref IS NOT NULL AND media_ref NOT IN (SELECT media_ref FROM cat)""",
 )
 def span_pack_referential_bloom(spark, sf_dir):
-    """R1 via strategy='bloom': the catalog is cut by an EXACT Bloom
-    prune (bitmap over the distinct refs actually used; no false
-    negatives ⇒ every matching catalog row survives ⇒ identical
-    anti-join output) BEFORE the two-phase distinct rewrite runs — the
-    shape for a global media store orders of magnitude wider than one
-    table's ref domain, where even the distinct-refs anti-join would
-    shuffle 10^9 catalog keys for nothing. The fixture's catalog is
-    inflated 50× with decoy refs no document uses, so a green row
-    proves the prune kept exactly the rows the oracle's plain NOT IN
-    (which never sees the decoys' absence) requires — and the pytest
-    grid asserts the decoys were in fact pruned, not carried."""
+    """R1 with the default strategy over a catalog inflated 50× with
+    decoy refs no document uses — a catalog far wider than the table's
+    ref domain must leave the anti-join's output unchanged; the oracle's
+    plain NOT IN must match row-for-row. The name is kept for outside
+    drivers of the registry."""
     from zparse_spark.operators.rules import referential_violations
 
     docs, cat = _pack_input(spark)
@@ -311,9 +304,7 @@ def span_pack_referential_bloom(spark, sf_dir):
         cat.sparkSession.range(0, 50 * 512)
         .select(F.concat(F.lit("decoy://"), F.col("id").cast("string")).alias("media_ref"))
     )
-    return referential_violations(
-        docs, cat.select("media_ref").unionByName(decoys), strategy="bloom"
-    )
+    return referential_violations(docs, cat.select("media_ref").unionByName(decoys))
 
 
 @register(
@@ -345,8 +336,8 @@ FROM sp JOIN fdmsg m ON m.media_ref = sp.media_ref""",
 def span_pack_media_kind_fd(spark, sf_dir):
     """F1: every media_ref must carry ONE span kind table-wide — the
     span-level application of the X31 FD core, attributed back to each
-    offending occurrence (same nested-pruned projection + broadcast-
-    back shape as R1 'distinct'). The fixture corpus violates this
+    offending occurrence (nested-pruned projection, violating-ref set
+    broadcast back onto the occurrences). The fixture corpus violates this
     naturally (~310 of 512 refs, ~1k occurrence rows)."""
     from zparse_spark.operators.rules import media_kind_consistency_violations
 
