@@ -220,6 +220,56 @@ def test_rules_hash_pinned():
     )
 
 
+# py4j round trips of one violations() build below: 676 with plan
+# construction in SQL text and call-site capture off, so ~1.5x headroom.
+# With capture on and Column-built rules it was 6,043.
+PLAN_PY4J_BUDGET = 1000
+
+
+def test_plan_build_py4j_budget(spark):
+    """Driver-side plan construction is a fixed cost per gate call, paid
+    in py4j round trips before any data moves: count them for one
+    violations() build (fused R1, default rules plus M1), catalog probe
+    job included."""
+    import threading
+
+    from tests.conftest import make_docs
+    from zparse_spark.multimodal import decode_verdicts
+
+    docs = make_docs(
+        spark,
+        [
+            ("d1", [("text", "hi", None, 0), ("image", "", "m1", 5)], "p0"),
+            ("d2", [("image", "", "m2", 0)], "p1"),
+        ],
+    )
+    cat = spark.createDataFrame([("m1",)], "media_ref string")
+    pay = spark.createDataFrame(
+        [("m1", "image", bytearray(b"xx"))],
+        "media_ref string, media_kind string, payload binary",
+    )
+    eng = ValidationEngine(ValidationConfig(enable_media_decode=True))
+    mv = decode_verdicts(pay)
+    client = spark.sparkContext._gateway._gateway_client
+    send, calls, me = client.send_command, [], threading.get_ident()
+
+    def counting(*args, **kwargs):
+        # py4j's finalizer thread sends object-release commands through
+        # the same client whenever Python GC runs: not this build's calls
+        if threading.get_ident() == me:
+            calls.append(1)
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        eng.violations(docs, cat, media_verdicts=mv)
+    finally:
+        del client.send_command
+    assert len(calls) <= PLAN_PY4J_BUDGET, len(calls)
+    # get_spark turns PySpark's per-op call-site capture off
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
 def test_verdict_diff_statuses(spark):
     """All five diff statuses from hand-built verdict matrices."""
     from zparse_spark.plans.engine import verdict_diff

@@ -104,6 +104,48 @@ def test_crash_rerun_does_not_duplicate_violations(spark, tmp_path):
     assert got == expected
 
 
+def test_torn_manifest_tail_revalidates_last_partition(spark, tmp_path):
+    """A crash mid-append leaves a torn last line in manifest.jsonl. The
+    resume skips it, so that partition re-validates; the next commit cuts
+    the fragment off instead of gluing its row onto it; the readback
+    equals a full run. An unparseable line that is not the last one is
+    corruption and still raises."""
+    import json
+
+    import pytest
+
+    out = str(tmp_path / "run8")
+    docs = generate_documents(spark, n_docs=200, seed=5, n_partitions=4).drop("_fixture_class")
+    cat = generate_media_catalog(spark)
+    eng = ValidationEngine(ValidationConfig(enable_drift=False))
+    rh = eng.config.rules_hash()
+
+    first = run_with_manifest(eng, docs, cat, out)
+    path = os.path.join(out, "manifest.jsonl")
+    with open(path, "rb") as f:
+        data = f.read()
+    torn = json.loads(data.splitlines()[-1])["partition"]
+    with open(path, "wb") as f:
+        f.write(data[:-20])  # the last row lost its tail mid-write
+
+    assert run_with_manifest(eng, docs, cat, out) == [torn]
+    m = Manifest(out)
+    assert m.committed_partitions(spark, rh) == set(first)
+    full = eng.violations(docs, cat)
+    got = m.read_violations(spark, rh).select(*full.columns)
+    assert got.count() == full.count()
+    assert got.exceptAll(full).count() == 0 and full.exceptAll(got).count() == 0
+    assert run_with_manifest(eng, docs, cat, out) == []
+
+    with open(path) as f:
+        lines = f.readlines()
+    lines[0] = lines[0][:10] + "\n"
+    with open(path, "w") as f:
+        f.writelines(lines)
+    with pytest.raises(ValueError):
+        m.committed_partitions(spark, rh)
+
+
 def test_parquet_backed_manifest_resume(spark, tmp_path):
     """The cluster-deployment manifest shape: commit rows live in a
     parquet table next to the data; resume works identically."""

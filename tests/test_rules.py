@@ -701,12 +701,21 @@ def test_media_refcounts_and_orphans(spark):
 
 
 @pytest.mark.parametrize(
-    "query", ["span_pack_violations", "span_pack_overlap", "span_pack_check_constraints"]
+    "query",
+    [
+        "span_pack_violations",
+        "span_pack_overlap",
+        "span_pack_check_constraints",
+        "span_pack_drift",
+        "span_pack_verdicts",
+    ],
 )
 def test_span_pack_full_rows_match_duckdb_twin(spark, sf_dir, query):
     """Every column of every violation row — messages and line/col
     included — equals the DuckDB ``oracle_sql()`` twin's, under the
-    oracle gate's own normalization (scripts/check_oracles.py)."""
+    oracle gate's own normalization (scripts/check_oracles.py). The same
+    holds for D1's per-partition PSI/KL scores and for the verdict grid
+    with D1 on, where the planted ``pdrift`` partition must fail D1."""
     import duckdb
 
     import __spark_entry__ as entry
@@ -720,3 +729,5 @@ def test_span_pack_full_rows_match_duckdb_twin(spark, sf_dir, query):
     assert sorted(sdf.columns) == sorted(ocols)
     assert srows and len(srows) == len(orows)
     assert value_hash(sdf.columns, srows) == value_hash(ocols, orows)
+    if query == "span_pack_verdicts":
+        assert ("pdrift", "D1", False) in {r[:3] for r in srows}

@@ -52,8 +52,7 @@ Reference parity map (file:line in /root/reference):
 
 from __future__ import annotations
 
-import functools
-import operator
+import math
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
@@ -87,6 +86,35 @@ class DeclaredRule(Rule):
 def _sql_str(s: str) -> str:
     """``s`` as a Spark SQL string literal."""
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_double(x: float) -> str:
+    """``x`` as a Spark SQL DOUBLE literal, the same double ``F.lit(x)``
+    makes (a bare ``0.25`` would parse as DECIMAL)."""
+    x = float(x)
+    return f"{x!r}D" if math.isfinite(x) else f"CAST('{x}' AS DOUBLE)"
+
+
+def _violation_rows(frame: DataFrame, rule_id: str, kind: str, message_sql: str,
+                    grain: str = "span") -> DataFrame:
+    """``frame`` projected to the nine ``VIOLATION_SCHEMA`` columns in one
+    SQL select, for a rule emitted outside ``_compile_rules``: constant
+    rule_id/kind, NULL line/col, ``message_sql`` over ``frame``. ``grain``
+    says which keys ``frame`` carries: 'span' (doc_id, span_pos, offset),
+    'doc' (doc_id) or 'partition' (none; the rest are NULL)."""
+    null = "CAST(NULL AS {}) AS {}".format
+    at_doc, at_span = grain in ("span", "doc"), grain == "span"
+    return frame.selectExpr(
+        "`partition`",
+        "doc_id" if at_doc else null("STRING", "doc_id"),
+        f"{_sql_str(rule_id)} AS rule_id",
+        f"{_sql_str(kind)} AS kind",
+        "span_pos" if at_span else null("INT", "span_pos"),
+        "`offset`" if at_span else null("BIGINT", "`offset`"),
+        null("INT", "line"),
+        null("INT", "col"),
+        f"{message_sql} AS message",
+    )
 
 
 # --------------------------------------------------------------------------
@@ -271,40 +299,40 @@ def _compile_rules(frame: DataFrame, rules: list[DeclaredRule]) -> DataFrame:
       pass at 16M docs. Messages are one CASE over the exploded rule_id,
       evaluated on violations only; columns no message reads (the span
       text among them) are pruned before the explode.
-    """
-    null_i, null_l = F.lit(None).cast("int"), F.lit(None).cast("long")
-    fires = [F.coalesce(F.expr(r.violation_sql), F.lit(False)) for r in rules]
 
-    def item(r: DeclaredRule) -> Column:
+    The plan is built from SQL text (a handful of py4j calls), not from
+    hundreds of Column calls, each a driver→JVM round trip.
+    """
+    fires = [f"coalesce(({r.violation_sql}), false)" for r in rules]
+
+    def field(on: bool, col: str, dtype: str) -> str:
+        return f"CAST({col if on else 'NULL'} AS {dtype})"
+
+    def item(r: DeclaredRule) -> str:
         at_span = r.level != "doc"
-        return F.struct(
-            F.lit(r.rule_id).alias("rule_id"),
-            F.lit(r.kind).alias("kind"),
-            (F.col("span_pos") if at_span else null_i).cast("int").alias("span_pos"),
-            (F.col("offset") if at_span else null_l).cast("long").alias("offset"),
-            (F.col("line") if r.positioned else null_i).cast("int").alias("line"),
-            (F.col("col") if r.positioned else null_i).cast("int").alias("col"),
+        return (
+            f"named_struct('rule_id', {_sql_str(r.rule_id)}, 'kind', {_sql_str(r.kind)},"
+            f" 'span_pos', {field(at_span, 'span_pos', 'INT')},"
+            f" 'offset', {field(at_span, '`offset`', 'BIGINT')},"
+            f" 'line', {field(r.positioned, 'line', 'INT')},"
+            f" 'col', {field(r.positioned, 'col', 'INT')})"
         )
 
-    items = F.array_compact(F.array(*[F.when(f, item(r)) for f, r in zip(fires, rules)]))
-    message = F.expr(
-        "CASE _v.rule_id "
-        + " ".join(f"WHEN {_sql_str(r.rule_id)} THEN {r.message_sql}" for r in rules)
-        + " END"
-    )
+    items = ", ".join(f"CASE WHEN {f} THEN {item(r)} END" for f, r in zip(fires, rules))
+    message = " ".join(f"WHEN {_sql_str(r.rule_id)} THEN {r.message_sql}" for r in rules)
     return (
-        frame.filter(functools.reduce(operator.or_, fires))
-        .select("*", F.explode(items).alias("_v"))
-        .select(
-            "partition",
+        frame.filter(" OR ".join(fires))
+        .selectExpr("*", f"explode(array_compact(array({items}))) AS _v")
+        .selectExpr(
+            "`partition`",
             "doc_id",
-            F.col("_v.rule_id").alias("rule_id"),
-            F.col("_v.kind").alias("kind"),
-            F.col("_v.span_pos").alias("span_pos"),
-            F.col("_v.offset").alias("offset"),
-            F.col("_v.line").alias("line"),
-            F.col("_v.col").alias("col"),
-            message.alias("message"),
+            "_v.rule_id AS rule_id",
+            "_v.kind AS kind",
+            "_v.span_pos AS span_pos",
+            "_v.`offset` AS `offset`",
+            "_v.line AS line",
+            "_v.col AS col",
+            f"CASE _v.rule_id {message} END AS message",
         )
     )
 
@@ -508,21 +536,9 @@ def uniqueness_violations(docs: DataFrame) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") > 1)
     )
-    return (
-        docs.join(dups, "doc_id")
-        .select(
-            "partition",
-            "doc_id",
-            F.lit("U1").alias("rule_id"),
-            F.lit(ErrorKind.DUPLICATE_KEY).alias("kind"),
-            F.lit(None).cast("int").alias("span_pos"),
-            F.lit(None).cast("long").alias("offset"),
-            F.lit(None).cast("int").alias("line"),
-            F.lit(None).cast("int").alias("col"),
-            F.concat(F.lit("doc_id appears "), F.col("n").cast("string"), F.lit(" times")).alias(
-                "message"
-            ),
-        )
+    return _violation_rows(
+        docs.join(dups, "doc_id"), "U1", ErrorKind.DUPLICATE_KEY,
+        "concat('doc_id appears ', CAST(n AS STRING), ' times')", grain="doc",
     )
 
 
@@ -569,19 +585,11 @@ def referential_violations(
         cat = F.broadcast(cat)
     elif strategy == "smj":
         cat = cat.hint("merge")
-    dangling = refs.join(cat, "media_ref", "left_anti")
-    return dangling.select(
-        "partition",
-        "doc_id",
-        F.lit("R1").alias("rule_id"),
-        F.lit(ErrorKind.DANGLING_MEDIA_REF).alias("kind"),
-        "span_pos",
-        "offset",
-        # null by design: this branch's scan prunes to (media_ref, offset)
-        # — deriving line/col would read every text byte
-        F.lit(None).cast("int").alias("line"),
-        F.lit(None).cast("int").alias("col"),
-        F.concat(F.lit("dangling media_ref: "), F.col("media_ref")).alias("message"),
+    # line/col null by design: this branch's scan prunes to (media_ref,
+    # offset) — deriving line/col would read every text byte
+    return _violation_rows(
+        refs.join(cat, "media_ref", "left_anti"), "R1", ErrorKind.DANGLING_MEDIA_REF,
+        "concat('dangling media_ref: ', media_ref)",
     )
 
 
@@ -627,18 +635,9 @@ def media_payload_violations(
             .withColumn("error_kind", F.lit("missing"))
         )
         bad = undecodable.unionByName(missing)
-    return refs.join(bad, "media_ref").select(
-        "partition",
-        "doc_id",
-        F.lit("M1").alias("rule_id"),
-        F.lit(ErrorKind.MEDIA_DECODE_FAILED).alias("kind"),
-        "span_pos",
-        "offset",
-        F.lit(None).cast("int").alias("line"),
-        F.lit(None).cast("int").alias("col"),
-        F.concat(
-            F.lit("media payload "), F.col("error_kind"), F.lit(": "), F.col("media_ref")
-        ).alias("message"),
+    return _violation_rows(
+        refs.join(bad, "media_ref"), "M1", ErrorKind.MEDIA_DECODE_FAILED,
+        "concat('media payload ', error_kind, ': ', media_ref)",
     )
 
 
@@ -651,71 +650,61 @@ def drift_scores(docs: DataFrame, params: RuleParams | None = None) -> DataFrame
     higher-order functions (no explode), so the shuffle input is
     |docs| × |kinds| tiny rows → groupBy(partition, kind) → the global
     side is a broadcast-sized |kinds| table.
+
+    Built from SQL text: the per-kind terms are a few hundred expression
+    nodes, and as Column calls each would be a driver→JVM round trip.
+    Sums fold left to right over the kind domain, the order the DuckDB
+    twin (queries_span.py) mirrors, and every double literal carries a
+    ``D`` suffix (a bare ``0.0`` is a DECIMAL in Spark SQL).
     """
     p = params or RuleParams()
-    eps = p.drift_epsilon
-    kind_domain = list(p.kind_domain)
+    eps = _sql_double(p.drift_epsilon)
+    kinds = list(p.kind_domain)
     # per-doc counts per kind in ONE pass. The kinds array is projected
     # with GetArrayStructFields (spans.kind) BEFORE the aggregate so
-    # nested-schema pruning reaches the scan: a HOF over F.col("spans")
+    # nested-schema pruning reaches the scan: a HOF over the spans struct
     # would read every text byte just to count kinds (measured 6x
     # anti-scaling at 32 cores from the wasted decode bandwidth).
-    domain_arr = F.array(*[F.lit(k) for k in kind_domain])
-    zero = F.array(*[F.lit(0).cast("long") for _ in kind_domain])
-    counts = F.aggregate(
-        F.coalesce(F.col("_kinds"), F.array()),
-        zero,
-        lambda acc, k0: F.zip_with(
-            acc, domain_arr, lambda c, k: c + F.when(k0 == k, 1).otherwise(0)
-        ),
+    domain = ", ".join(_sql_str(k) for k in kinds)
+    zero = ", ".join("CAST(0 AS BIGINT)" for _ in kinds)
+    counts = (
+        f"aggregate(coalesce(_kinds, array()), array({zero}), (acc, k0) ->"
+        f" zip_with(acc, array({domain}), (c, k) -> c + CASE WHEN k0 = k THEN 1 ELSE 0 END))"
     )
+    c, g = [f"`c_{k}`" for k in kinds], [f"`g_{k}`" for k in kinds]
     per_doc = (
-        docs.select("partition", F.col("spans.kind").alias("_kinds"))
-        .select("partition", counts.alias("_counts"))
-        .select(
-            "partition",
-            *[F.element_at("_counts", j + 1).alias(f"_c_{k}") for j, k in enumerate(kind_domain)],
+        docs.selectExpr("`partition`", "spans.kind AS _kinds")
+        .selectExpr("`partition`", f"{counts} AS _counts")
+        .selectExpr(
+            "`partition`",
+            *[f"element_at(_counts, {j + 1}) AS `_c_{k}`" for j, k in enumerate(kinds)],
         )
     )
-    per_part = per_doc.groupBy("partition").agg(
-        *[F.sum(f"_c_{k}").alias(f"c_{k}") for k in kind_domain]
+    per_part = (
+        per_doc.groupBy("partition")
+        .agg(*[F.expr(f"sum(`_c_{k}`) AS {ck}") for k, ck in zip(kinds, c)])
+        .selectExpr("*", f"0 + {' + '.join(c)} AS _tot")
     )
-    total_expr = sum((F.col(f"c_{k}") for k in kind_domain), F.lit(0))
-    per_part = per_part.withColumn("_tot", total_expr)
-
-    glob = per_part.agg(
-        *[F.sum(f"c_{k}").alias(f"g_{k}") for k in kind_domain],
-        F.sum("_tot").alias("g_tot"),
+    glob = per_part.selectExpr(
+        *[f"sum({ck}) AS {gk}" for ck, gk in zip(c, g)], "sum(_tot) AS g_tot"
     )
-    joined = per_part.crossJoin(F.broadcast(glob))
-    psi_terms = []
-    kl_terms = []
-    for k in kind_domain:
+    psi_terms, kl_terms = [], []
+    for ck, gk in zip(c, g):
         # zero-span guard (ANSI mode makes x/0 a job-killer, and a
         # partition of span-less docs is DATA, not a reason to abort —
         # collect-don't-abort): an empty partition's shares floor to
         # eps across every kind, which reads as maximal drift and
         # flags the partition instead of crashing the run
-        pk = (
-            F.when(F.col("_tot") > 0, F.col(f"c_{k}") / F.col("_tot")).otherwise(
-                F.lit(0.0)
-            )
-            + eps
-        )
-        qk = (
-            F.when(F.col("g_tot") > 0, F.col(f"g_{k}") / F.col("g_tot")).otherwise(
-                F.lit(0.0)
-            )
-            + eps
-        )
-        psi_terms.append((pk - qk) * F.log(pk / qk))
+        pk = f"(CASE WHEN _tot > 0 THEN {ck} / _tot ELSE 0.0D END + {eps})"
+        qk = f"(CASE WHEN g_tot > 0 THEN {gk} / g_tot ELSE 0.0D END + {eps})"
+        psi_terms.append(f"(({pk} - {qk}) * ln({pk} / {qk}))")
         # KL(p‖q) with the same eps floor — asymmetric by design: it
         # penalizes mass the partition has that the global lacks, the
         # direction that flags an over-represented kind in one shard
-        kl_terms.append(pk * F.log(pk / qk))
-    psi = sum(psi_terms[1:], psi_terms[0])
-    kl = sum(kl_terms[1:], kl_terms[0])
-    return joined.select("partition", psi.alias("psi"), kl.alias("kl"))
+        kl_terms.append(f"({pk} * ln({pk} / {qk}))")
+    return per_part.crossJoin(F.broadcast(glob)).selectExpr(
+        "`partition`", f"{' + '.join(psi_terms)} AS psi", f"{' + '.join(kl_terms)} AS kl"
+    )
 
 
 def drift_violations(docs: DataFrame, params: RuleParams | None = None) -> DataFrame:
@@ -726,32 +715,24 @@ def drift_violations(docs: DataFrame, params: RuleParams | None = None) -> DataF
     north-star names both metrics). One violation row per partition
     regardless of which metric(s) fired; the message names each."""
     p = params or RuleParams()
-    scored = drift_scores(docs, p)
-    fired = F.col("psi") > p.psi_threshold
-    msg = F.concat(
-        F.lit("PSI "), F.round("psi", 6).cast("string"), F.lit(f" > {p.psi_threshold}")
-    )
+
+    def metric(name: str, col: str, threshold: float) -> tuple[str, str]:
+        return (
+            f"{col} > {_sql_double(threshold)}",
+            f"concat('{name} ', CAST(round({col}, 6) AS STRING), {_sql_str(f' > {threshold}')})",
+        )
+
+    fired, msg = metric("PSI", "psi", p.psi_threshold)
     if p.kl_threshold is not None:
-        kl_fired = F.col("kl") > p.kl_threshold
-        kl_msg = F.concat(
-            F.lit("KL "), F.round("kl", 6).cast("string"), F.lit(f" > {p.kl_threshold}")
+        kl_fired, kl_msg = metric("KL", "kl", p.kl_threshold)
+        msg = (
+            f"concat_ws('; ', CASE WHEN {fired} THEN {msg} END,"
+            f" CASE WHEN {kl_fired} THEN {kl_msg} END)"
         )
-        msg = F.concat_ws(
-            "; ",
-            F.when(fired, msg),
-            F.when(kl_fired, kl_msg),
-        )
-        fired = fired | kl_fired
-    return scored.filter(fired).select(
-        "partition",
-        F.lit(None).cast("string").alias("doc_id"),
-        F.lit("D1").alias("rule_id"),
-        F.lit(ErrorKind.DRIFT_EXCEEDED).alias("kind"),
-        F.lit(None).cast("int").alias("span_pos"),
-        F.lit(None).cast("long").alias("offset"),
-        F.lit(None).cast("int").alias("line"),
-        F.lit(None).cast("int").alias("col"),
-        msg.alias("message"),
+        fired = f"{fired} OR {kl_fired}"
+    return _violation_rows(
+        drift_scores(docs, p).filter(fired), "D1", ErrorKind.DRIFT_EXCEEDED, msg,
+        grain="partition",
     )
 
 
@@ -890,21 +871,9 @@ def media_kind_consistency_violations(
     bad = functional_dependency_violations(
         occ, "media_ref", "kind", max_examples=max_examples
     )
-    return occ.join(F.broadcast(bad), "media_ref").select(
-        "partition",
-        "doc_id",
-        F.lit("F1").alias("rule_id"),
-        F.lit(ErrorKind.INCONSISTENT_MEDIA_KIND).alias("kind"),
-        "span_pos",
-        "offset",
-        F.lit(None).cast("int").alias("line"),
-        F.lit(None).cast("int").alias("col"),
-        F.concat(
-            F.lit("inconsistent media kind: "),
-            F.col("media_ref"),
-            F.lit(" -> "),
-            F.col("variants"),
-        ).alias("message"),
+    return _violation_rows(
+        occ.join(F.broadcast(bad), "media_ref"), "F1", ErrorKind.INCONSISTENT_MEDIA_KIND,
+        "concat('inconsistent media kind: ', media_ref, ' -> ', variants)",
     )
 
 
@@ -924,8 +893,8 @@ class CheckConstraint:
     tables, while CheckConstraints let a user bolt domain rules onto the
     same engine — same violation schema, same verdict grid, same
     rules_hash/resume discipline — without touching engine code. The
-    predicate compiles via ``F.expr`` into the same whole-stage-codegen
-    map stage as the built-in rules: declarative in, Catalyst out, no
+    predicate compiles as SQL text (``_compile_rules``) into the same
+    whole-stage-codegen map stage as the built-in rules: declarative in, Catalyst out, no
     Python anywhere.
 
     ``level``:

@@ -68,10 +68,29 @@ class Manifest:
                 .orderBy("commit_seq")
                 .collect()
             ]
+        return self._read_jsonl()[0]
+
+    def _read_jsonl(self) -> tuple[list[dict], int]:
+        """The JSONL rows and the byte length of the intact prefix they
+        were read from. A crash mid-append can leave a torn LAST line: it
+        is skipped, so its partitions count as uncommitted and
+        re-validate, and ``commit_many`` cuts it off before appending. An
+        unparseable line anywhere else is corruption and raises."""
         if not os.path.exists(self._rows_path):
-            return []
-        with open(self._rows_path) as f:
-            return [json.loads(line) for line in f if line.strip()]
+            return [], 0
+        with open(self._rows_path, "rb") as f:
+            lines = f.read().splitlines(keepends=True)
+        rows, end = [], 0
+        for i, line in enumerate(lines):
+            if line.strip():
+                try:
+                    rows.append(json.loads(line))
+                except ValueError:  # JSONDecodeError, or UTF-8 cut mid-character
+                    if i == len(lines) - 1:
+                        break
+                    raise
+            end += len(line)
+        return rows, end
 
     # -- commits ------------------------------------------------------
 
@@ -122,10 +141,18 @@ class Manifest:
             df.coalesce(1).write.mode("append").parquet(self._table_path)
             return
         os.makedirs(self.path, exist_ok=True)
-        # append-only JSONL; readers take the last row per key
-        with open(self._rows_path, "a") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
+        # append-only JSONL; readers take the last row per key. The batch
+        # is ONE write + fsync, after cutting off a torn tail a crashed
+        # append left behind (the new rows must not be glued onto it)
+        _, end = self._read_jsonl()
+        with open(self._rows_path, "a+b") as f:
+            f.truncate(end)
+            f.seek(max(end - 1, 0))
+            # a row torn just before its newline parsed: terminate it
+            sep = b"\n" if end and f.read(1) != b"\n" else b""
+            f.write(sep + "".join(json.dumps(r) + "\n" for r in rows).encode())
+            f.flush()
+            os.fsync(f.fileno())
 
     def as_dataframe(self, spark: SparkSession) -> DataFrame:
         rows = self._read_rows(spark)

@@ -60,6 +60,14 @@ def get_spark(
         # Python (BatchEvalPython) — everything Python-side is Arrow batches.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # PySpark 4.x records a Python call site on every Column/DataFrame
+        # op: a stack walk plus extra py4j round trips each time. Building
+        # one violations() plan made about three times as many py4j calls
+        # with it on, and at small batches driver-side plan time is a large
+        # share of a gate call. The cost of turning it off: PySpark error
+        # messages lose the user call-site block, which would point inside
+        # zparse_spark anyway.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
