@@ -1,8 +1,8 @@
 """Resume semantics: a rerun validates only uncommitted partitions and
 produces no duplicate violations (SURVEY.md §5.2 item 5); table-wide
 rules re-evaluate over the full table into their own sink; sinks are
-namespaced by rules_hash; the manifest itself can be JSONL or a parquet
-table."""
+namespaced by rules_hash; the manifest is a driver-local JSONL file and
+a URI path is refused."""
 
 from __future__ import annotations
 
@@ -24,6 +24,11 @@ def test_resume_skips_committed_partitions(spark, tmp_path):
         r["partition"] for r in docs.select("partition").distinct().collect()
     )
 
+    # a FRESH Manifest object (new driver) sees the commits
+    m = Manifest(out)
+    assert m.committed_partitions(spark, eng.config.rules_hash()) == set(first)
+    assert m.as_dataframe(spark).count() == len(first)
+
     # second run: nothing pending
     second = run_with_manifest(eng, docs, cat, out)
     assert second == []
@@ -43,7 +48,7 @@ def test_partial_manifest_resumes_remainder(spark, tmp_path):
 
     parts = sorted(r["partition"] for r in docs.select("partition").distinct().collect())
     m = Manifest(out)
-    m.commit(parts[0], rh, 0, 0)  # pretend partition 0 already done
+    m.commit_many([(parts[0], rh, 0, 0)])  # pretend partition 0 already done
 
     done = run_with_manifest(eng, docs, cat, out)
     assert sorted(done) == parts[1:]
@@ -52,7 +57,7 @@ def test_partial_manifest_resumes_remainder(spark, tmp_path):
 def test_rules_hash_invalidates_resume(spark, tmp_path):
     out = str(tmp_path / "run3")
     m = Manifest(out)
-    m.commit("p000", "stale_hash", 1, 0)
+    m.commit_many([("p000", "stale_hash", 1, 0)])
     eng = ValidationEngine()
     assert m.committed_partitions(spark, eng.config.rules_hash()) == set()
 
@@ -73,7 +78,7 @@ def test_resume_runs_table_rules_over_full_table(spark, tmp_path):
     )
     eng = ValidationEngine(ValidationConfig(enable_drift=False, enable_referential=False))
     m = Manifest(out)
-    m.commit("p0", eng.config.rules_hash(), 2, 0)  # p0 committed before the dup landed in p1
+    m.commit_many([("p0", eng.config.rules_hash(), 2, 0)])  # p0 committed before the dup landed in p1
 
     done = run_with_manifest(eng, docs, None, out)
     assert done == ["p1"]
@@ -146,25 +151,55 @@ def test_torn_manifest_tail_revalidates_last_partition(spark, tmp_path):
         m.committed_partitions(spark, rh)
 
 
-def test_parquet_backed_manifest_resume(spark, tmp_path):
-    """The cluster-deployment manifest shape: commit rows live in a
-    parquet table next to the data; resume works identically."""
-    out = str(tmp_path / "run6")
-    docs = generate_documents(spark, n_docs=200, seed=5, n_partitions=4).drop("_fixture_class")
-    cat = generate_media_catalog(spark)
+def test_uri_manifest_path_is_refused(spark, tmp_path, monkeypatch):
+    """The manifest is read and written with local file I/O while Spark
+    would write the sinks to the URI's filesystem: the local readback
+    would find no sink and pass every cell. Refused before any job runs,
+    and no local directory named after the scheme appears."""
+    import pytest
+
+    from tests.conftest import make_docs
+
+    monkeypatch.chdir(tmp_path)
+    docs = make_docs(spark, [("a", [("text", "hi", None, 0)], "p0")])
     eng = ValidationEngine(ValidationConfig(enable_drift=False))
-    m = Manifest(out, fmt="parquet")
+    sc = spark.sparkContext
+    sc.setJobGroup("uri_manifest_path", "run_with_manifest")
+    try:
+        with pytest.raises(ValueError, match="driver-local"):
+            run_with_manifest(eng, docs, None, "s3a://b/run")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("uri_manifest_path") == []
+    assert os.listdir(tmp_path) == []
 
-    first = run_with_manifest(eng, docs, cat, out, manifest=m)
-    assert len(first) == 4
-    assert not os.path.exists(os.path.join(out, "manifest.jsonl"))
-    assert os.path.isdir(os.path.join(out, "manifest_table"))
 
-    # a FRESH Manifest object (new driver) sees the commits
-    m2 = Manifest(out, fmt="parquet")
-    assert len(m2.committed_partitions(spark, eng.config.rules_hash())) == 4
-    assert run_with_manifest(eng, docs, cat, out, manifest=m2) == []
-    assert m2.as_dataframe(spark).count() == 4
+# Spark jobs of one resume below (one committed partition, one appended):
+# 15 with one groupBy of the pending docs giving both the partitions to
+# validate and their doc counts, so one job of headroom; 17 when a
+# distinct() found the partitions and a second groupBy of the pending
+# docs counted them at readback.
+RESUME_JOB_BUDGET = 16
+
+
+def test_run_with_manifest_job_budget(spark, tmp_path):
+    """Each Spark job is a fixed cost per resume: count the jobs of one
+    run_with_manifest through a statusTracker job group."""
+    out = str(tmp_path / "run9")
+    docs = generate_documents(spark, n_docs=100, seed=5, n_partitions=2).drop("_fixture_class")
+    cat = generate_media_catalog(spark)
+    eng = ValidationEngine()
+    parts = sorted(r["partition"] for r in docs.select("partition").distinct().collect())
+    assert run_with_manifest(eng, docs.filter(docs.partition == parts[0]), cat, out) == parts[:1]
+
+    sc = spark.sparkContext
+    sc.setJobGroup("resume_job_budget", "run_with_manifest")
+    try:
+        assert run_with_manifest(eng, docs, cat, out) == parts[1:]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("resume_job_budget")
+    assert len(jobs) <= RESUME_JOB_BUDGET, len(jobs)
 
 
 def test_rules_hash_change_does_not_mix_stale_violations(spark, tmp_path):

@@ -542,6 +542,33 @@ def uniqueness_violations(docs: DataFrame) -> DataFrame:
     )
 
 
+def _media_spans(docs: DataFrame, *extra: str) -> DataFrame:
+    """The media spans R1, M1 and F1 check: (partition, doc_id, span_pos,
+    offset, media_ref, *extra), one row per span with a non-null ref;
+    ``extra`` names further span fields (F1 takes ``kind``).
+
+    GetArrayStructFields projections (spans.media_ref / spans.offset) are
+    visible to nested-schema pruning, so the parquet scan reads ONLY those
+    subfields — a HOF over F.col("spans") would force the full struct (all
+    text bytes) through the reader. posexplode keeps the span_pos position
+    contract; text spans are filtered right after.
+    """
+    fields = ("media_ref", *extra, "offset")
+    zipped = F.arrays_zip(*(F.col(f"spans.{f}").alias(f) for f in fields))
+    return (
+        docs.select("partition", "doc_id", F.posexplode(zipped).alias("span_pos", "x"))
+        .filter(F.col("x.media_ref").isNotNull())
+        .select(
+            "partition",
+            "doc_id",
+            F.col("span_pos").cast("int").alias("span_pos"),
+            F.col("x.offset").cast("long").alias("offset"),
+            F.col("x.media_ref").alias("media_ref"),
+            *(F.col(f"x.{f}").alias(f) for f in extra),
+        )
+    )
+
+
 def referential_violations(
     docs: DataFrame,
     media_catalog: DataFrame,
@@ -561,25 +588,7 @@ def referential_violations(
     """
     if strategy not in ("auto", "broadcast", "smj"):
         raise ValueError(f"unknown strategy {strategy!r}")
-    # GetArrayStructFields projections (spans.media_ref / spans.offset)
-    # are visible to nested-schema pruning, so the parquet scan reads ONLY
-    # those two subfields — a HOF over F.col("spans") would force the
-    # full struct (all text bytes) through the reader. posexplode keeps
-    # the span_pos position contract; text spans are filtered right after.
-    zipped = F.arrays_zip(
-        F.col("spans.media_ref").alias("media_ref"), F.col("spans.offset").alias("offset")
-    )
-    refs = (
-        docs.select("partition", "doc_id", F.posexplode(zipped).alias("span_pos", "x"))
-        .filter(F.col("x.media_ref").isNotNull())
-        .select(
-            "partition",
-            "doc_id",
-            F.col("span_pos").cast("int").alias("span_pos"),
-            F.col("x.offset").cast("long").alias("offset"),
-            F.col("x.media_ref").alias("media_ref"),
-        )
-    )
+    refs = _media_spans(docs)
     cat = media_catalog.select("media_ref").distinct()
     if strategy == "broadcast":
         cat = F.broadcast(cat)
@@ -611,20 +620,7 @@ def media_payload_violations(
     ``check_missing=False`` to skip that whole branch and keep the rule
     broadcast-only.
     """
-    zipped = F.arrays_zip(
-        F.col("spans.media_ref").alias("media_ref"), F.col("spans.offset").alias("offset")
-    )
-    refs = (
-        docs.select("partition", "doc_id", F.posexplode(zipped).alias("span_pos", "x"))
-        .filter(F.col("x.media_ref").isNotNull())
-        .select(
-            "partition",
-            "doc_id",
-            F.col("span_pos").cast("int").alias("span_pos"),
-            F.col("x.offset").cast("long").alias("offset"),
-            F.col("x.media_ref").alias("media_ref"),
-        )
-    )
+    refs = _media_spans(docs)
     undecodable = payload_verdicts.filter(~F.col("ok")).select("media_ref", "error_kind")
     bad = undecodable
     if check_missing:
@@ -851,23 +847,7 @@ def media_kind_consistency_violations(
     line/col are null by design: deriving them would drag every text
     byte through this branch's scan (same trade as R1).
     """
-    zipped = F.arrays_zip(
-        F.col("spans.media_ref").alias("media_ref"),
-        F.col("spans.kind").alias("kind"),
-        F.col("spans.offset").alias("offset"),
-    )
-    occ = (
-        docs.select("partition", "doc_id", F.posexplode(zipped).alias("span_pos", "x"))
-        .filter(F.col("x.media_ref").isNotNull())
-        .select(
-            "partition",
-            "doc_id",
-            F.col("span_pos").cast("int").alias("span_pos"),
-            F.col("x.offset").cast("long").alias("offset"),
-            F.col("x.media_ref").alias("media_ref"),
-            F.col("x.kind").alias("kind"),
-        )
-    )
+    occ = _media_spans(docs, "kind")
     bad = functional_dependency_violations(
         occ, "media_ref", "kind", max_examples=max_examples
     )

@@ -19,10 +19,10 @@ mix old-rule rows into a new run's readback):
         after a partition committed still (re)surfaces the committed
         partition's row, because this sink is never partition-filtered
 
-Manifest storage: append-only JSONL (driver-local, the sandbox default)
-or a parquet table (``fmt='parquet'`` — the cluster deployment shape:
-lives next to the data, readable by any engine, commit rows carry a
-monotonic ``commit_seq``). Both are last-writer-wins per
+Manifest storage: append-only JSONL in a driver-local directory, read
+and written with Python file I/O on the driver (a path with a URI
+scheme — ``s3a://``, ``hdfs://`` — is rejected: the sinks would land
+remotely while the local readback found none). Last-writer-wins per
 (partition, rules_hash), so speculative double-commits are idempotent.
 """
 
@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,38 +38,30 @@ from pyspark.sql import functions as F
 
 from zparse_spark.schema import MANIFEST_SCHEMA, VIOLATION_SCHEMA
 
+# a scheme prefix (``s3a:``, ``hdfs:``, ``file:``) — Hadoop resolves the
+# path on that filesystem, while the manifest's file I/O stays local
+_URI_SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:")
+
 
 class Manifest:
-    def __init__(self, path: str, fmt: str = "jsonl"):
-        if fmt not in ("jsonl", "parquet"):
-            raise ValueError(f"unknown manifest fmt {fmt!r}")
+    def __init__(self, path: str):
+        """``path`` is a driver-local directory holding ``manifest.jsonl``
+        and the violation sinks; a URI raises ``ValueError``."""
+        if _URI_SCHEME.match(path):
+            raise ValueError(
+                f"manifest directory must be a driver-local path, got {path!r}"
+            )
         self.path = path
-        self.fmt = fmt
         self._rows_path = os.path.join(path, "manifest.jsonl")
-        self._table_path = os.path.join(path, "manifest_table")
 
     # -- reads --------------------------------------------------------
 
     def committed_partitions(self, spark: SparkSession, rules_hash: str) -> set[str]:
-        rows = self._read_rows(spark)
         return {
             r["partition"]
-            for r in rows
+            for r in self._read_jsonl()[0]
             if r["rules_hash"] == rules_hash and r["status"] == "done"
         }
-
-    def _read_rows(self, spark: SparkSession | None = None) -> list[dict]:
-        if self.fmt == "parquet":
-            if not os.path.isdir(self._table_path):
-                return []
-            spark = spark or SparkSession.getActiveSession()
-            return [
-                r.asDict()
-                for r in spark.read.parquet(self._table_path)
-                .orderBy("commit_seq")
-                .collect()
-            ]
-        return self._read_jsonl()[0]
 
     def _read_jsonl(self) -> tuple[list[dict], int]:
         """The JSONL rows and the byte length of the intact prefix they
@@ -94,24 +87,14 @@ class Manifest:
 
     # -- commits ------------------------------------------------------
 
-    def commit(
-        self,
-        partition: str,
-        rules_hash: str,
-        n_docs: int,
-        n_violations: int,
-        spark: SparkSession | None = None,
-    ) -> None:
-        self.commit_many([(partition, rules_hash, n_docs, n_violations)], spark=spark)
-
     def commit_many(
         self,
         entries: list[tuple[str, str, int, int]],
         spark: SparkSession | None = None,
     ) -> None:
         """Commit a batch of (partition, rules_hash, n_docs, n_violations)
-        rows in ONE write — at cluster scale a run commits thousands of
-        partitions and a per-row parquet append would be a job each."""
+        rows in ONE write + fsync — a run commits thousands of partitions.
+        ``spark`` is unused."""
         if not entries:
             return
         ts = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
@@ -126,20 +109,6 @@ class Manifest:
             }
             for p, rh, n, v in entries
         ]
-        if self.fmt == "parquet":
-            spark = spark or SparkSession.getActiveSession()
-            seq = time.time_ns()
-            df = spark.createDataFrame(
-                [
-                    (r["partition"], r["rules_hash"], r["status"], r["n_docs"],
-                     r["n_violations"], r["ts"], seq + i)
-                    for i, r in enumerate(rows)
-                ],
-                "partition string, rules_hash string, status string, "
-                "n_docs long, n_violations long, ts string, commit_seq long",
-            )
-            df.coalesce(1).write.mode("append").parquet(self._table_path)
-            return
         os.makedirs(self.path, exist_ok=True)
         # append-only JSONL; readers take the last row per key. The batch
         # is ONE write + fsync, after cutting off a torn tail a crashed
@@ -155,7 +124,7 @@ class Manifest:
             os.fsync(f.fileno())
 
     def as_dataframe(self, spark: SparkSession) -> DataFrame:
-        rows = self._read_rows(spark)
+        rows = self._read_jsonl()[0]
         if not rows:
             return spark.createDataFrame([], MANIFEST_SCHEMA)
         df = spark.createDataFrame(rows)
@@ -197,10 +166,10 @@ def run_with_manifest(
     docs: DataFrame,
     media_catalog: DataFrame | None,
     out_dir: str,
-    manifest: Manifest | None = None,
     media_verdicts: DataFrame | None = None,
 ) -> list[str]:
-    """Resumable run: validate only partitions absent from the manifest.
+    """Resumable run: validate only partitions absent from the manifest
+    kept in ``out_dir`` (a driver-local directory, see ``Manifest``).
 
     One Spark job validates ALL pending partitions together (the pending
     filter is a partition-prunable predicate — on a real Iceberg table it
@@ -218,55 +187,54 @@ def run_with_manifest(
     read pruned scans (doc_id/partition, spans.kind), so the full-table
     pass does not re-decode text bytes.
     """
+    manifest = Manifest(out_dir)
     spark = docs.sparkSession
-    manifest = manifest or Manifest(out_dir)
     rh = engine.config.rules_hash()
     done = manifest.committed_partitions(spark, rh)
     pending_docs = docs.filter(~F.col("partition").isin(sorted(done))) if done else docs
 
-    todo = [r["partition"] for r in pending_docs.select("partition").distinct().collect()]
-    if not todo:
+    # the one scan of the pending docs: which partitions to validate and
+    # how many docs each holds (the n_docs their commit rows record)
+    n_docs = {
+        r["partition"]: r["count"]
+        for r in pending_docs.groupBy("partition").count().collect()
+    }
+    if not n_docs:
         return []
+    todo = list(n_docs)
 
     # M1 is partition-decomposable (each referencing span checks against
     # the global payload table), so it rides with the pending-only pass
     viol = engine.violations(
         pending_docs, media_catalog, include_table_rules=False, media_verdicts=media_verdicts
     )
-    viol_path = manifest.partition_sink(rh)
     # per-partition dynamic overwrite: re-validating a partition REPLACES
     # its violation files instead of appending a second copy — a job that
     # died between the data write and the manifest commit stays idempotent
-    # on rerun (mode('append') would double-count on readback)
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        viol.write.mode("overwrite").partitionBy("partition").parquet(viol_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    # on rerun (mode('append') would double-count on readback). A writer
+    # option, so no other job on the session sees the mode
+    (
+        viol.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("partition")
+        .parquet(manifest.partition_sink(rh))
+    )
 
     # table-wide rules: full re-evaluation, full sink overwrite (see
     # module docstring) — never filtered to pending partitions
     table_viol = engine.table_violations(docs)
     table_viol.write.mode("overwrite").parquet(manifest.table_sink(rh))
 
-    all_viol = manifest.read_violations(spark, rh)
-    counts = {
-        r["partition"]: (r["n"], r["v"])
-        for r in pending_docs.groupBy("partition")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .join(
-            all_viol.filter(F.col("partition").isin(todo))
-            .groupBy("partition")
-            .agg(F.count(F.lit(1)).alias("v")),
-            "partition",
-            "left",
-        )
-        .fillna({"v": 0})
+    n_viol = {
+        r["partition"]: r["count"]
+        for r in manifest.read_violations(spark, rh)
+        .filter(F.col("partition").isin(todo))
+        .groupBy("partition")
+        .count()
         .collect()
     }
     manifest.commit_many(
-        [(p, rh, *counts.get(p, (0, 0))) for p in todo], spark=spark
+        [(p, rh, n, n_viol.get(p, 0)) for p, n in n_docs.items()], spark=spark
     )
     return todo
 

@@ -4,21 +4,22 @@ table with the same rule pack.
 Two shapes:
 
 - ``validate_stream``: readStream → foreachBatch(full rule pack →
-  violations sink + manifest commit per microbatch). foreachBatch is the
-  right tool because the rule pack includes joins/aggregates (uniqueness
-  within batch, referential vs a static catalog) that are awkward as
-  pure streaming operators; each microbatch is a bounded DataFrame so
-  the batch engine is reused verbatim — one code path for batch and
-  streaming (the reference's one-parser-many-frontends shape,
-  lib.rs vs cli vs api vs wasm).
+  append to one violations sink, rows stamped with ``batch_id``).
+  foreachBatch is the right tool because the rule pack includes
+  joins/aggregates (uniqueness within batch, referential vs a static
+  catalog) that are awkward as pure streaming operators; each
+  microbatch is a bounded DataFrame so the batch engine is reused
+  verbatim — one code path for batch and streaming (the reference's
+  one-parser-many-frontends shape, lib.rs vs cli vs api vs wasm).
 
 - ``violation_rate_windows``: a genuinely incremental operator —
   per-(window, rule) violation counts with event-time watermarking, so
   late events are folded in until the watermark closes the window.
 
-Checkpointing: Spark's own streaming checkpoint (offsets + state) plus
-our per-batch manifest rows — the streaming incarnation of the
-SURVEY.md §4.3 resume contract.
+Checkpointing: Spark's own streaming checkpoint (offsets + state) is
+the streaming incarnation of the SURVEY.md §4.3 resume contract; no
+manifest is written. A retried batch appends its rows again, under the
+same ``batch_id``.
 """
 
 from __future__ import annotations
