@@ -127,7 +127,9 @@ def test_checks_resume_through_manifest(spark, tmp_path):
     out = str(tmp_path / "krun")
     docs = _fixture(spark)
     eng = ValidationEngine(
-        ValidationConfig(check_constraints=(K_NONEMPTY, K_OFFSET), enable_drift=False)
+        ValidationConfig(
+            check_constraints=(K_NONEMPTY, K_OFFSET), enable_drift=False, enable_referential=False
+        )
     )
     done = run_with_manifest(eng, docs, None, out)
     assert sorted(done) == ["p0", "p1"]
@@ -141,6 +143,7 @@ def test_checks_resume_through_manifest(spark, tmp_path):
         ValidationConfig(
             check_constraints=(K_NONEMPTY, CheckConstraint("K3", "span", "offset >= 1")),
             enable_drift=False,
+            enable_referential=False,
         )
     )
     assert sorted(run_with_manifest(eng2, docs, None, out)) == ["p0", "p1"]
@@ -187,6 +190,45 @@ def test_cli_check_flag(tmp_path, spark):
         ).fetchall()
     }
     assert cells[("p1", "K1")] is False and cells[("p0", "K1")] is True
+
+
+def test_cli_no_resume_keeps_other_files(tmp_path, spark):
+    """--no-resume deletes only the resume state (manifest.jsonl and the
+    two violation sinks), never the rest of --out — which may be a
+    working directory — and every partition re-validates."""
+    import json
+    import os
+    import subprocess
+    import sys as _sys
+
+    from zparse_spark.plans.manifest import Manifest, run_with_manifest
+
+    docs = _fixture(spark)
+    dpath = str(tmp_path / "docs")
+    docs.write.parquet(dpath)
+    out = str(tmp_path / "out")
+    # committed resume state under the CLI's no-flag config, plus a stale
+    # sink namespace and a file the gate does not own
+    run_with_manifest(ValidationEngine(ValidationConfig(enable_referential=False)), docs, None, out)
+    assert Manifest(out).as_dataframe(spark).count() == 2
+    os.makedirs(os.path.join(out, "violations", "rules_hash=stale"))
+    with open(os.path.join(out, "keep.txt"), "w") as f:
+        f.write("not the gate's")
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [_sys.executable, os.path.join(root, "validate.py"), "--documents", dpath, "--out", out,
+         "--no-resume", "--master", "local[2]"],
+        capture_output=True, text=True, timeout=300, cwd=root,
+    )
+    assert proc.returncode in (0, 1), proc.stderr[-2000:]
+    assert "validated partitions: 2 (resumed past 0)" in proc.stdout
+    with open(os.path.join(out, "keep.txt")) as f:
+        assert f.read() == "not the gate's"
+    assert not os.path.exists(os.path.join(out, "violations", "rules_hash=stale"))
+    # the old manifest rows are gone: only this run's two commits remain
+    with open(os.path.join(out, "manifest.jsonl")) as f:
+        assert sorted(json.loads(line)["partition"] for line in f) == ["p0", "p1"]
 
 
 def test_spark_submit_py_files_deployment(tmp_path, spark):

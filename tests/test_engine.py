@@ -430,22 +430,34 @@ def test_active_rule_ids_reflect_config():
     config evaluates — the verdict grid and the CLI's --warn-rules
     unknown-rule warning both key off it (a warn-rule naming a rule
     disabled for this run must warn, not silently no-op)."""
-    from zparse_spark.operators.rules import ALL_RULES, CheckConstraint
+    from zparse_spark.operators.rules import CheckConstraint, RuleParams
     from zparse_spark.plans.engine import ValidationConfig, ValidationEngine
 
-    base = set(ValidationEngine().active_rule_ids())
-    assert base == {r.rule_id for r in ALL_RULES}
-    assert "M1" not in base and "F1" not in base  # opt-in rules inactive
+    span = ["S1", "S2", "S3", "S4", "S5", "S6", "S7", "S8"]
+    # opt-in rules (S9, M1, F1) stay out of the default grid
+    assert ValidationEngine().active_rule_ids() == span + ["U1", "R1", "D1"]
 
     cfg = ValidationConfig(
         enable_uniqueness=False,
         enable_media_decode=True,
         enable_media_kind_fd=True,
-        check_constraints=(CheckConstraint("K1", "span", "offset >= 0"),),
+        check_constraints=(
+            CheckConstraint("K2", "span", "offset >= 0"),
+            CheckConstraint("K1", "doc", "n_spans > 0"),
+        ),
     )
-    active = ValidationEngine(cfg).active_rule_ids()
-    assert "U1" not in active
-    assert {"M1", "F1", "K1"} <= set(active)
+    assert ValidationEngine(cfg).active_rule_ids() == span + ["R1", "D1", "M1", "F1", "K1", "K2"]
+
+    # S9 sits right after S1; M1/F1 follow D1; K ids come last, sorted
+    cfg = ValidationConfig(
+        params=RuleParams(check_span_overlap=True),
+        enable_media_decode=True,
+        enable_media_kind_fd=True,
+        check_constraints=(CheckConstraint("K9", "doc", "true"), CheckConstraint("K0", "doc", "true")),
+    )
+    assert ValidationEngine(cfg).active_rule_ids() == (
+        ["S1", "S9"] + span[1:] + ["U1", "R1", "D1", "M1", "F1", "K0", "K9"]
+    )
 
 
 def test_apply_waivers(spark):

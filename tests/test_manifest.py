@@ -174,6 +174,29 @@ def test_uri_manifest_path_is_refused(spark, tmp_path, monkeypatch):
     assert os.listdir(tmp_path) == []
 
 
+def test_referential_without_catalog_is_refused(spark, tmp_path):
+    """R1 on and no catalog: every partition would commit with R1
+    passing, under the same rules_hash a run with the catalog uses, so
+    that run would skip them and never report a dangling media_ref.
+    Refused before any job runs, and nothing is written."""
+    import pytest
+
+    from tests.conftest import make_docs
+
+    out = str(tmp_path / "run10")
+    docs = make_docs(spark, [("d1", [("image", None, "m_dangling", 0)], "p0")])
+    eng = ValidationEngine(ValidationConfig(enable_drift=False))
+    sc = spark.sparkContext
+    sc.setJobGroup("referential_no_catalog", "run_with_manifest")
+    try:
+        with pytest.raises(ValueError, match="media_catalog is None"):
+            run_with_manifest(eng, docs, None, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("referential_no_catalog") == []
+    assert not os.path.exists(out)
+
+
 # Spark jobs of one resume below (one committed partition, one appended):
 # 15 with one groupBy of the pending docs giving both the partitions to
 # validate and their doc counts, so one job of headroom; 17 when a

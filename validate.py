@@ -94,7 +94,11 @@ def main(argv: list[str] | None = None) -> int:
              "rows per (partition, rule) cell (portable md5 ranking — resumes "
              "and reruns select the identical examples)",
     )
-    ap.add_argument("--no-resume", action="store_true", help="ignore the manifest and revalidate everything")
+    ap.add_argument(
+        "--no-resume", action="store_true",
+        help="revalidate everything: delete the resume state in --out (manifest.jsonl, "
+             "violations/, violations_table/) first; other files in --out are kept",
+    )
     ap.add_argument("--master", default=None, help="override master (default: spark-submit supplies it)")
     ap.add_argument(
         "--warn-rules", default="", metavar="R1,D1,...",
@@ -190,9 +194,15 @@ def main(argv: list[str] | None = None) -> int:
         return 0 if n_conf == 0 else 1
 
     if args.no_resume:
+        import contextlib
+        import os
         import shutil
 
-        shutil.rmtree(args.out, ignore_errors=True)
+        # only what run_with_manifest resumes from: --out may hold anything
+        for sink in ("violations", "violations_table"):
+            shutil.rmtree(os.path.join(args.out, sink), ignore_errors=True)
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(os.path.join(args.out, "manifest.jsonl"))
     manifest = Manifest(args.out)
     done = run_with_manifest(engine, docs, catalog, args.out, media_verdicts=media_verdicts)
 

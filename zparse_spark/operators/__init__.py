@@ -1,6 +1,4 @@
 from zparse_spark.operators.rules import (  # noqa: F401
-    Rule,
-    SPAN_RULES,
     span_rule_violations,
     uniqueness_violations,
     referential_violations,

@@ -25,9 +25,9 @@ of the same shape and go through the same compiler. The scale decisions:
   pandas UDF (the vectorized Python path of the CIDR 2022 paper), because
   its running fold is exactly what Catalyst interprets worst (measured
   2.4× against a Catalyst ``aggregate`` fold, since removed). It is the
-  engine's only line/col implementation. A vectorized Arrow pandas_udf
-  fallback also exists in ``zparse_spark.functions.text`` for grammars
-  regex can't express.
+  engine's only line/col implementation. ``validate_text_udf`` in
+  ``zparse_spark.functions.text`` is the exact Python lexer the regex
+  path is tested against (tests/test_functions.py), not an engine path.
 
 Table-level rules (uniqueness, referential, drift) are the operators the
 reference *couldn't* have (single-thread, single buffer) and are where
@@ -58,19 +58,11 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from zparse_spark.schema import ErrorKind, SPAN_KIND_DOMAIN
+from zparse_spark.schema import ErrorKind, SPAN_KIND_DOMAIN, union_violations
 
 
 @dataclass(frozen=True)
-class Rule:
-    rule_id: str
-    kind: str
-    level: str  # 'span' | 'doc' | 'table'
-    description: str
-
-
-@dataclass(frozen=True)
-class DeclaredRule(Rule):
+class DeclaredRule:
     """A rule as data: SQL the compiler (``_compile_rules``) turns into
     columns. ``violation_sql`` is a boolean over one row of the rule's
     frame (NULL counts as not fired); ``message_sql`` is a string over
@@ -78,6 +70,10 @@ class DeclaredRule(Rule):
     rows carry no span_pos/offset; ``positioned`` rows carry the span's
     (line, col)."""
 
+    rule_id: str
+    kind: str
+    level: str  # 'span' | 'doc' | 'table'
+    description: str
     violation_sql: str
     message_sql: str
     positioned: bool
@@ -337,47 +333,16 @@ def _compile_rules(frame: DataFrame, rules: list[DeclaredRule]) -> DataFrame:
     )
 
 
-def _rule(r: Rule) -> Rule:
-    return Rule(r.rule_id, r.kind, r.level, r.description)
-
-
-SPAN_RULES = [_rule(r) for r in span_rules(RuleParams())]
-
-TABLE_RULES = [
-    Rule("U1", ErrorKind.DUPLICATE_KEY, "table", "doc_id unique table-wide"),
-    Rule("R1", ErrorKind.DANGLING_MEDIA_REF, "table", "media_ref exists in catalog"),
-    Rule("D1", ErrorKind.DRIFT_EXCEEDED, "table", "span-kind PSI under threshold per partition"),
-]
-
-# Opt-in (RuleParams.check_span_overlap): span EXTENTS must not overlap —
-# strictly stronger than S1's start-order check. Out of ALL_RULES because
-# extent semantics only bind when offsets are character positions in the
-# canonical reconstruction; the input_hint leaves offset an opaque
-# ordering key, so existing manifests never evaluated S9.
-OVERLAP_RULES = [
-    _rule(r)
-    for r in span_rules(RuleParams(check_span_overlap=True))
-    if r.rule_id not in {s.rule_id for s in SPAN_RULES}
-]
-
-# Opt-in (ValidationConfig.enable_media_decode): referenced payloads must
-# exist and decode. Kept out of ALL_RULES so the default dense verdict
-# grid is unchanged for callers without a payload table.
-MEDIA_RULES = [
-    Rule("M1", ErrorKind.MEDIA_DECODE_FAILED, "media",
-         "referenced media payload present and decodes"),
-]
-
-# Opt-in (ValidationConfig.enable_media_kind_fd): the same media_ref must
-# carry the same span kind table-wide. Out of ALL_RULES for the same
-# reason as M1 — the default verdict grid must not grow a rule existing
-# manifests never evaluated.
-FD_RULES = [
-    Rule("F1", ErrorKind.INCONSISTENT_MEDIA_KIND, "table",
-         "media_ref kind consistent table-wide"),
-]
-
-ALL_RULES = SPAN_RULES + TABLE_RULES
+# Every built-in rule id, in verdict-grid order: the span pack with S9 next
+# to its S1 sibling, then the table/media rules. Opt-in ids stay out of the
+# default grid: S9 binds only when offsets are character positions in the
+# canonical reconstruction (the input_hint leaves offset an opaque ordering
+# key), M1 needs a payload table, and F1 would grow the grid of callers
+# whose manifests never evaluated it.
+RULE_IDS = tuple(r.rule_id for r in span_rules(RuleParams(check_span_overlap=True))) + (
+    "U1", "R1", "D1", "M1", "F1",
+)
+OPT_IN_RULE_IDS = frozenset({"S9", "M1", "F1"})
 
 
 def span_rule_violations(
@@ -892,9 +857,7 @@ class CheckConstraint:
     description: str = ""
 
 
-_RESERVED_RULE_IDS = frozenset(
-    r.rule_id for r in ALL_RULES + OVERLAP_RULES + MEDIA_RULES + FD_RULES
-)
+_RESERVED_RULE_IDS = frozenset(RULE_IDS)
 
 
 def _validate_checks(checks: tuple[CheckConstraint, ...] | list[CheckConstraint]) -> None:
@@ -980,14 +943,7 @@ def check_constraint_violations(
         )
         parts.append(_compile_rules(ex, rules["span"]))
 
-    if not parts:
-        from zparse_spark.schema import VIOLATION_SCHEMA
-
-        return docs.sparkSession.createDataFrame([], VIOLATION_SCHEMA)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return union_violations(docs.sparkSession, parts)
 
 
 def aggregate_reconciliation(

@@ -4,10 +4,10 @@ Lifecycle (SURVEY.md §3.4): read documents → span/doc rules (map-only,
 with referential fused in when the catalog broadcasts) ∪ uniqueness
 (single-phase count agg, map-side combine) ∪ referential (pruned explode
 + sort-merge anti-join, big catalogs only) ∪ drift (two small aggs) →
-violations table → verdict matrix. One pass over the input; the four branches share the
-scan (Spark reuses the exchange under AQE where possible, and the input
-is columnar parquet/Iceberg so each branch prunes to the columns it
-needs).
+violations table → verdict matrix. Each branch reads its own pruned
+scan of the columnar input: the bulk plan with R1 fused has six — the
+full spans (span pack), the catalog's media_ref, U1's (doc_id,
+partition) and doc_id, and D1's spans.kind twice.
 
 The per-(partition, rule) verdict matrix is the distributed analog of
 the reference's fixture-directory contract: every fixtures/valid/* must
@@ -25,7 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from zparse_spark.operators.rules import (
-    ALL_RULES,
+    OPT_IN_RULE_IDS,
+    RULE_IDS,
     CheckConstraint,
     RuleParams,
     _validate_checks,
@@ -37,6 +38,7 @@ from zparse_spark.operators.rules import (
     span_rule_violations,
     uniqueness_violations,
 )
+from zparse_spark.schema import union_violations
 
 
 @dataclass(frozen=True)
@@ -79,7 +81,7 @@ class ValidationConfig:
                         self.enable_referential, self.enable_drift,
                         self.enable_media_decode, self.media_check_missing,
                         self.enable_media_kind_fd, self.check_constraints,
-                        sorted(r.rule_id for r in ALL_RULES))).encode()
+                        sorted(r for r in RULE_IDS if r not in OPT_IN_RULE_IDS))).encode()
         return hashlib.sha256(payload).hexdigest()[:16]
 
 
@@ -94,13 +96,6 @@ def _table_rules(c: ValidationConfig) -> dict[str, Callable[[DataFrame], DataFra
         "F1": (c.enable_media_kind_fd, media_kind_consistency_violations),
     }
     return {rule_id: fn for rule_id, (on, fn) in rules.items() if on}
-
-
-def _union_all(parts: list[DataFrame]) -> DataFrame:
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 @dataclass
@@ -173,18 +168,14 @@ class ValidationEngine:
             parts.append(check_constraint_violations(docs, c.check_constraints))
         if include_table_rules:
             parts += [fn(docs) for fn in _table_rules(c).values()]
-        return _union_all(parts)
+        return union_violations(docs.sparkSession, parts)
 
     def table_violations(self, docs: DataFrame) -> DataFrame:
         """Only the table-wide rules (U1 uniqueness, D1 drift, F1 media
         kind) — the ones that are NOT partition-decomposable and must
         always see the full table, even on a resumed run."""
-        from zparse_spark.schema import VIOLATION_SCHEMA
-
         parts = [fn(docs) for fn in _table_rules(self.config).values()]
-        if not parts:
-            return docs.sparkSession.createDataFrame([], VIOLATION_SCHEMA)
-        return _union_all(parts)
+        return union_violations(docs.sparkSession, parts)
 
     def active_rule_ids(self) -> list[str]:
         """Rule ids this configuration actually evaluates — the single
@@ -194,23 +185,16 @@ class ValidationEngine:
         rule naming a disabled rule silently has no effect, which is
         exactly what the warning exists to catch)."""
         c = self.config
-        active = [r.rule_id for r in ALL_RULES]
-        if c.params.check_span_overlap:
-            # opt-in extent-overlap rule rides the span stage; insert next
-            # to its S siblings so grid ordering stays stable
-            active.insert(active.index("S1") + 1, "S9")
-        if not c.enable_uniqueness:
-            active.remove("U1")
-        if not c.enable_referential:
-            active.remove("R1")
-        if not c.enable_drift:
-            active.remove("D1")
-        if c.enable_media_decode:
-            active.append("M1")
-        if c.enable_media_kind_fd:
-            active.append("F1")
-        active.extend(sorted(k.rule_id for k in c.check_constraints))
-        return active
+        enabled = {
+            "S9": c.params.check_span_overlap,
+            "U1": c.enable_uniqueness,
+            "R1": c.enable_referential,
+            "D1": c.enable_drift,
+            "M1": c.enable_media_decode,
+            "F1": c.enable_media_kind_fd,
+        }
+        active = [r for r in RULE_IDS if enabled.get(r, True)]
+        return active + sorted(k.rule_id for k in c.check_constraints)
 
     def verdicts(self, docs: DataFrame, violations: DataFrame) -> DataFrame:
         """Dense (partition × rule) pass/fail grid, including all-pass

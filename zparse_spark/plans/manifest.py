@@ -36,7 +36,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from zparse_spark.schema import MANIFEST_SCHEMA, VIOLATION_SCHEMA
+from zparse_spark.schema import MANIFEST_SCHEMA, VIOLATION_SCHEMA, union_violations
 
 # a scheme prefix (``s3a:``, ``hdfs:``, ``file:``) — Hadoop resolves the
 # path on that filesystem, while the manifest's file I/O stays local
@@ -149,16 +149,12 @@ class Manifest:
         """All persisted violations for ``rules_hash``: the per-partition
         sink UNION the table-rule sink. Explicit schema — an all-valid
         run leaves empty directories."""
-        parts = []
-        for p in (self.partition_sink(rules_hash), self.table_sink(rules_hash)):
-            if os.path.isdir(p):
-                parts.append(spark.read.schema(VIOLATION_SCHEMA).parquet(p))
-        if not parts:
-            return spark.createDataFrame([], VIOLATION_SCHEMA)
-        out = parts[0]
-        for df in parts[1:]:
-            out = out.unionByName(df)
-        return out
+        parts = [
+            spark.read.schema(VIOLATION_SCHEMA).parquet(p)
+            for p in (self.partition_sink(rules_hash), self.table_sink(rules_hash))
+            if os.path.isdir(p)
+        ]
+        return union_violations(spark, parts)
 
 
 def run_with_manifest(
@@ -186,8 +182,18 @@ def run_with_manifest(
     namespace precisely so this rewrite cannot clobber them). Both rules
     read pruned scans (doc_id/partition, spans.kind), so the full-table
     pass does not re-decode text bytes.
+
+    R1 without ``media_catalog`` raises ``ValueError`` before any job:
+    every partition would commit with R1 passing under the same
+    ``rules_hash`` a run with the catalog uses, and that run would then
+    skip them.
     """
     manifest = Manifest(out_dir)
+    if engine.config.enable_referential and media_catalog is None:
+        raise ValueError(
+            "enable_referential=True but media_catalog is None — pass the "
+            "media catalog or build the engine with enable_referential=False"
+        )
     spark = docs.sparkSession
     rh = engine.config.rules_hash()
     done = manifest.committed_partitions(spark, rh)

@@ -14,6 +14,7 @@ reference ``Pos { offset, line, col }`` (error.rs:8-12).
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
@@ -120,6 +121,18 @@ VIOLATION_SCHEMA = T.StructType(
         T.StructField("message", T.StringType(), True),
     ]
 )
+
+
+def union_violations(spark: SparkSession, parts: list[DataFrame]) -> DataFrame:
+    """``parts`` (violation frames) unioned by name, left to right; an
+    empty ``VIOLATION_SCHEMA`` frame when there are none."""
+    if not parts:
+        return spark.createDataFrame([], VIOLATION_SCHEMA)
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
 
 # Per-(partition, rule) pass/fail — analog of the valid/invalid fixture
 # directory contract (tests/fixtures_test.rs:5-37).
