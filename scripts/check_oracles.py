@@ -11,19 +11,18 @@ Usage: python scripts/check_oracles.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
 
-
-import os
 
 # STRICT_FLOATS=1: hash floats at FULL precision (repr) instead of 6
 # significant digits — the driver's hash protocol is tighter than 6g

@@ -3,11 +3,16 @@ verdict grid, rules_hash, and plan discipline (map-only, no Python)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from tests.conftest import make_docs
 from zparse_spark.operators.rules import CheckConstraint, check_constraint_violations
 from zparse_spark.plans.engine import ValidationConfig, ValidationEngine
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+VALIDATE = os.path.join(ROOT, "validate.py")
 
 
 def _fixture(spark):
@@ -167,14 +172,14 @@ def test_cli_check_flag(tmp_path, spark):
     out = str(tmp_path / "out")
     proc = subprocess.run(
         [
-            _sys.executable, "/root/repo/validate.py",
+            _sys.executable, VALIDATE,
             "--documents", dpath,
             "--out", out,
             "--check", "K1:span:offset >= 0",
             "--warn-rules", "R1",
             "--master", "local[2]",
         ],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo",
+        capture_output=True, text=True, timeout=300, cwd=ROOT,
     )
     assert proc.returncode == 1, proc.stderr[-2000:]  # violations exist
     # R1 is INACTIVE for this run (no --catalog): the warn-rule silently
@@ -215,11 +220,10 @@ def test_cli_no_resume_keeps_other_files(tmp_path, spark):
     with open(os.path.join(out, "keep.txt"), "w") as f:
         f.write("not the gate's")
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     proc = subprocess.run(
-        [_sys.executable, os.path.join(root, "validate.py"), "--documents", dpath, "--out", out,
+        [_sys.executable, VALIDATE, "--documents", dpath, "--out", out,
          "--no-resume", "--master", "local[2]"],
-        capture_output=True, text=True, timeout=300, cwd=root,
+        capture_output=True, text=True, timeout=300, cwd=ROOT,
     )
     assert proc.returncode in (0, 1), proc.stderr[-2000:]
     assert "validated partitions: 2 (resumed past 0)" in proc.stdout
@@ -245,7 +249,7 @@ def test_spark_submit_py_files_deployment(tmp_path, spark):
     zip_path = str(tmp_path / "zparse_spark.zip")
     build(zip_path)
     driver = str(tmp_path / "validate.py")
-    shutil.copy("/root/repo/validate.py", driver)
+    shutil.copy(VALIDATE, driver)
 
     docs = _fixture(spark)
     dpath = str(tmp_path / "docs")
@@ -303,7 +307,7 @@ def test_cli_waivers_and_overlap_flag(tmp_path, spark):
     ).write.parquet(wpath)
     out = str(tmp_path / "out")
     args = [
-        _sys.executable, "/root/repo/validate.py",
+        _sys.executable, VALIDATE,
         "--documents", dpath, "--out", out,
         "--check", "K1:doc:spans IS NOT NULL AND size(spans) >= 1",
         "--check", "K3:span:offset >= 0",
@@ -311,7 +315,7 @@ def test_cli_waivers_and_overlap_flag(tmp_path, spark):
         "--check-span-overlap",
         "--master", "local[2]",
     ]
-    proc = subprocess.run(args, capture_output=True, text=True, timeout=300, cwd="/root/repo")
+    proc = subprocess.run(args, capture_output=True, text=True, timeout=300, cwd=ROOT)
     # K1 is fully waived but K3 (expired waiver) still fails d5's cell
     assert proc.returncode == 1, proc.stderr[-2000:]
     assert "waived: 2" in proc.stdout
@@ -350,13 +354,13 @@ def test_cli_sample_screening_mode(tmp_path, spark):
     docs.write.parquet(dpath)
     out = str(tmp_path / "out")
     args = [
-        _sys.executable, "/root/repo/validate.py",
+        _sys.executable, VALIDATE,
         "--documents", dpath, "--out", out,
         "--check", "K1:doc:spans IS NOT NULL AND size(spans) >= 1",
         "--sample-fraction", "1.0",
         "--master", "local[2]",
     ]
-    proc = subprocess.run(args, capture_output=True, text=True, timeout=300, cwd="/root/repo")
+    proc = subprocess.run(args, capture_output=True, text=True, timeout=300, cwd=ROOT)
     assert proc.returncode == 1, proc.stderr[-2000:]
     assert "statistically confident breach" in proc.stdout
     rows = duckdb.sql(
@@ -384,11 +388,11 @@ def test_cli_repair_flag(tmp_path, spark):
     out = str(tmp_path / "out")
     proc = subprocess.run(
         [
-            _sys.executable, "/root/repo/validate.py",
+            _sys.executable, VALIDATE,
             "--documents", dpath, "--out", out, "--repair",
             "--master", "local[2]",
         ],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo",
+        capture_output=True, text=True, timeout=300, cwd=ROOT,
     )
     assert proc.returncode in (0, 1), proc.stderr[-2000:]
     n = duckdb.sql(f"SELECT count(*) FROM '{out}/repaired_documents/*.parquet'").fetchone()[0]
@@ -425,7 +429,7 @@ def test_cli_profile_flag(tmp_path, spark):
     docs.write.parquet(dpath)
     out = str(tmp_path / "out")
     r = subprocess.run(
-        [_sys.executable, "/root/repo/validate.py",
+        [_sys.executable, VALIDATE,
          "--documents", dpath, "--out", out,
          "--profile", "--master", "local[2]"],
         capture_output=True, text=True, timeout=600,
@@ -468,7 +472,7 @@ def test_cli_checksum_flag(tmp_path, spark):
     for i, dpath in enumerate((d1, d2)):
         out = str(tmp_path / f"out{i}")
         r = subprocess.run(
-            [_sys.executable, "/root/repo/validate.py",
+            [_sys.executable, VALIDATE,
              "--documents", dpath, "--out", out,
              "--checksum", "--master", "local[2]"],
             capture_output=True, text=True, timeout=600,
@@ -698,7 +702,7 @@ def test_cli_suite_flag_gates_exit_code(tmp_path, spark):
 
     out = str(tmp_path / "out")
     r = subprocess.run(
-        [_sys.executable, "/root/repo/validate.py",
+        [_sys.executable, VALIDATE,
          "--documents", dpath, "--out", out,
          "--suite", spath, "--suite-table", f"extra={epath}",
          "--master", "local[2]"],
@@ -721,7 +725,7 @@ def test_cli_suite_flag_gates_exit_code(tmp_path, spark):
         _json.dump([spec[0]], fh)
     out2 = str(tmp_path / "out2")
     r2 = subprocess.run(
-        [_sys.executable, "/root/repo/validate.py",
+        [_sys.executable, VALIDATE,
          "--documents", dpath, "--out", out2,
          "--suite", spath, "--master", "local[2]"],
         capture_output=True, text=True, timeout=600,

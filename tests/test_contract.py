@@ -2,9 +2,13 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from tests.conftest import make_docs
+
+VALIDATE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "validate.py")
 
 
 def _docs(spark):
@@ -90,7 +94,7 @@ def test_cli_contract_loop(tmp_path, spark):
     docs.write.parquet(dpath)
     cpath = str(tmp_path / "contract.yaml")
     r1 = subprocess.run(
-        [_sys.executable, "/root/repo/validate.py", "--documents", dpath,
+        [_sys.executable, VALIDATE, "--documents", dpath,
          "--out", str(tmp_path / "out1"), "--emit-contract", cpath,
          "--master", "local[2]"],
         capture_output=True, text=True, timeout=600,
@@ -105,7 +109,7 @@ def test_cli_contract_loop(tmp_path, spark):
     bad.write.parquet(bpath)
     out2 = str(tmp_path / "out2")
     r2 = subprocess.run(
-        [_sys.executable, "/root/repo/validate.py", "--documents", bpath,
+        [_sys.executable, VALIDATE, "--documents", bpath,
          "--out", out2, "--contract", cpath, "--master", "local[2]"],
         capture_output=True, text=True, timeout=600,
     )

@@ -198,31 +198,64 @@ def test_referential_without_catalog_is_refused(spark, tmp_path):
 
 
 # Spark jobs of one resume below (one committed partition, one appended):
-# 15 with one groupBy of the pending docs giving both the partitions to
-# validate and their doc counts, so one job of headroom; 17 when a
-# distinct() found the partitions and a second groupBy of the pending
-# docs counted them at readback.
-RESUME_JOB_BUDGET = 16
+# 14 with D1 reading spans.kind once, so one job of headroom; 15 when D1
+# built its per-partition histogram twice, and 17 when a distinct() found
+# the partitions and a second groupBy of the pending docs counted them at
+# readback.
+RESUME_JOB_BUDGET = 15
+# The same resume with M1 on: 15 jobs and 23 stages when M1 reads the
+# decode verdicts once and D1 reads spans.kind once; 18 and 28 when each
+# did its work twice. One job and one stage of headroom.
+RESUME_M1_JOB_BUDGET = 16
+RESUME_M1_STAGE_BUDGET = 24
+
+
+def _resume_jobs_and_stages(spark, eng, docs, cat, out, group, **kw):
+    """Commit the first partition, then resume over all of ``docs`` under
+    job group ``group``; returns that resume's (jobs, stages) as
+    statusTracker counts them (a skipped stage counts)."""
+    parts = sorted(r["partition"] for r in docs.select("partition").distinct().collect())
+    first = docs.filter(docs.partition == parts[0])
+    assert run_with_manifest(eng, first, cat, out, **kw) == parts[:1]
+
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "run_with_manifest")
+    try:
+        assert run_with_manifest(eng, docs, cat, out, **kw) == parts[1:]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    return len(jobs), len(stages)
 
 
 def test_run_with_manifest_job_budget(spark, tmp_path):
     """Each Spark job is a fixed cost per resume: count the jobs of one
     run_with_manifest through a statusTracker job group."""
-    out = str(tmp_path / "run9")
     docs = generate_documents(spark, n_docs=100, seed=5, n_partitions=2).drop("_fixture_class")
-    cat = generate_media_catalog(spark)
-    eng = ValidationEngine()
-    parts = sorted(r["partition"] for r in docs.select("partition").distinct().collect())
-    assert run_with_manifest(eng, docs.filter(docs.partition == parts[0]), cat, out) == parts[:1]
+    jobs, _ = _resume_jobs_and_stages(
+        spark, ValidationEngine(), docs, generate_media_catalog(spark), str(tmp_path / "run9"),
+        "resume_job_budget",
+    )
+    assert jobs <= RESUME_JOB_BUDGET, jobs
 
-    sc = spark.sparkContext
-    sc.setJobGroup("resume_job_budget", "run_with_manifest")
-    try:
-        assert run_with_manifest(eng, docs, cat, out) == parts[1:]
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("resume_job_budget")
-    assert len(jobs) <= RESUME_JOB_BUDGET, len(jobs)
+
+def test_run_with_manifest_m1_job_and_stage_budget(spark, tmp_path):
+    """The resume budget with M1 on: the decode verdicts (an opaque
+    mapInPandas) and D1's kind histogram are each computed once."""
+    from zparse_spark.multimodal import decode_verdicts, synthesize_codec_payloads
+
+    docs = generate_documents(spark, n_docs=100, seed=5, n_partitions=2).drop("_fixture_class")
+    synthesize_codec_payloads(spark, n_media=24).write.parquet(str(tmp_path / "payloads"))
+    verdicts = decode_verdicts(spark.read.parquet(str(tmp_path / "payloads")))
+    jobs, stages = _resume_jobs_and_stages(
+        spark, ValidationEngine(ValidationConfig(enable_media_decode=True)), docs,
+        generate_media_catalog(spark), str(tmp_path / "run10"), "resume_m1_job_budget",
+        media_verdicts=verdicts,
+    )
+    assert jobs <= RESUME_M1_JOB_BUDGET, jobs
+    assert stages <= RESUME_M1_STAGE_BUDGET, stages
 
 
 def test_rules_hash_change_does_not_mix_stale_violations(spark, tmp_path):

@@ -191,7 +191,8 @@ def test_new_drift_and_repetition_plan_discipline(spark, docs_path):
     group; the only unpartitioned window runs over the n_bins-row global
     CDF) and broadcasts the bin grid + global side. repetition_signals
     is exactly one Arrow batch eval, no shuffle. drift_scores (PSI+KL)
-    stays HOF/codegen — no Python eval anywhere."""
+    is an explode, an aggregate and a window, all JVM — no Python eval
+    anywhere."""
     from zparse_spark.functions.text import repetition_signals
     from zparse_spark.operators.rules import drift_scores
     from zparse_spark.operators.stats import ks_drift_scores

@@ -2,9 +2,13 @@
 
 from __future__ import annotations
 
+import os
+
 import xml.etree.ElementTree as ET
 
 from tests.conftest import make_docs
+
+VALIDATE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "validate.py")
 
 
 def _run(spark):
@@ -64,7 +68,7 @@ def test_cli_report_flags(tmp_path, spark):
     xml_path = str(tmp_path / "report.xml")
     md_path = str(tmp_path / "report.md")
     r = subprocess.run(
-        [_sys.executable, "/root/repo/validate.py", "--documents", dpath,
+        [_sys.executable, VALIDATE, "--documents", dpath,
          "--out", str(tmp_path / "out"), "--junit-xml", xml_path,
          "--report-md", md_path, "--master", "local[2]"],
         capture_output=True, text=True, timeout=600,

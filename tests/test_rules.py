@@ -731,3 +731,153 @@ def test_span_pack_full_rows_match_duckdb_twin(spark, sf_dir, query):
     assert value_hash(sdf.columns, srows) == value_hash(ocols, orows)
     if query == "span_pack_verdicts":
         assert ("pdrift", "D1", False) in {r[:3] for r in srows}
+
+
+def _plan_nodes(plan, name: str) -> int:
+    """Nodes called ``name`` in a JVM logical/physical plan tree (a
+    node's name can appear more than once in its ``toString()``)."""
+    children = plan.children()
+    return (plan.nodeName() == name) + sum(
+        _plan_nodes(children.apply(i), name) for i in range(children.size())
+    )
+
+
+def _docs_null_partition(spark, rows):
+    """``make_docs`` with a nullable ``partition``, so a row may carry None."""
+    from pyspark.sql import types as T
+
+    from zparse_spark.schema import DOCUMENTS_SCHEMA
+
+    schema = T.StructType(
+        [*DOCUMENTS_SCHEMA.fields[:2], T.StructField("partition", T.StringType())]
+    )
+    data = [
+        (d, [tuple(s) for s in spans] if spans is not None else None, p) for d, spans, p in rows
+    ]
+    return spark.createDataFrame(data, schema)
+
+
+def test_m1_classifies_each_payload_once(spark):
+    """M1's rows for every verdict shape, with and without the missing
+    branch, and one decode (MapInPandas) per plan: the missing branch
+    reuses the verdict frame's one left join instead of reading it again."""
+    from zparse_spark.functions import media_codecs
+    from zparse_spark.multimodal import decode_verdicts
+    from zparse_spark.operators.rules import media_payload_violations
+
+    docs = _docs_null_partition(
+        spark,
+        [
+            ("d1", [T("hi", 0), M("m_ok", 2)], "p0"),
+            ("d2", [M("m_bad", 0)], "p0"),
+            ("d3", [M("m_dup", 4)], "p0"),
+            ("d4", [M("m_mixed", 0)], "p1"),
+            ("d5", [M("m_null", 0)], "p1"),
+            ("d6", [T("x", 0), M("m_gone", 1)], "p1"),
+            ("d7", [M("m_bad", 0), M("m_gone", 3)], None),
+        ],
+    )
+    verdicts = spark.createDataFrame(
+        [
+            ("m_ok", True, None),
+            ("m_bad", False, "truncated"),
+            ("m_dup", False, "truncated"),
+            ("m_dup", False, "bad_magic"),
+            ("m_mixed", True, None),
+            ("m_mixed", False, "unsupported_variant"),
+            ("m_null", None, None),
+            (None, False, "bad_magic"),
+        ],
+        "media_ref string, ok boolean, error_kind string",
+    )
+
+    def m1(check_missing):
+        return sorted(
+            (tuple(r) for r in media_payload_violations(docs, verdicts, check_missing).collect()),
+            key=repr,
+        )
+
+    def row(part, doc, pos, off, what, ref):
+        return (part, doc, "M1", "MediaDecodeFailed", pos, off, None, None,
+                f"media payload {what}: {ref}")
+
+    bad = [
+        row("p0", "d2", 0, 0, "truncated", "m_bad"),
+        row("p0", "d3", 0, 4, "bad_magic", "m_dup"),
+        row("p0", "d3", 0, 4, "truncated", "m_dup"),
+        row("p1", "d4", 0, 0, "unsupported_variant", "m_mixed"),
+        row(None, "d7", 0, 0, "truncated", "m_bad"),
+    ]
+    missing = [
+        row("p1", "d6", 1, 1, "missing", "m_gone"),
+        row(None, "d7", 1, 3, "missing", "m_gone"),
+    ]
+    assert m1(False) == sorted(bad, key=repr)
+    assert m1(True) == sorted(bad + missing, key=repr)
+
+    good = media_codecs.bmp_encode(media_codecs.synth_image(1))
+    pay = spark.createDataFrame(
+        [("m_ok", "image", bytearray(good)), ("m_bad", "image", bytearray(good[:20]))],
+        "media_ref string, media_kind string, payload binary",
+    )
+    m1_plan = media_payload_violations(docs, decode_verdicts(pay))._jdf.queryExecution()
+    assert _plan_nodes(m1_plan.optimizedPlan(), "MapInPandas") == 1
+
+
+def test_d1_one_scan_and_bit_identical_to_python_fold(spark, tmp_path):
+    """drift_scores reads spans.kind once (one FileScan) and its PSI/KL
+    are the exact doubles of a left-to-right fold over exact counts:
+    null/empty spans, an all-empty partition, null and out-of-domain
+    kinds and a null partition included."""
+    import functools
+    import operator
+
+    from zparse_spark.operators.rules import RuleParams, drift_scores
+
+    rows_in = [
+        ("a1", [T("a", 0), M("m1", 1), ("code", "c", None, 2)], "pa"),
+        ("a2", [T("b", 0), T("c", 1), ("table", "t", None, 2)], "pa"),
+        ("a3", None, "pa"),
+        ("a4", [], "pa"),
+        ("b1", [M("m2", 0, "video"), M("m3", 1, "audio"), (None, "n", None, 2)], "pb"),
+        ("b2", [("weird", "w", None, 0), T("d", 1)], "pb"),
+        ("e1", None, "pempty"),
+        ("e2", [], "pempty"),
+        ("e3", [("weird", "w", None, 0)], "pempty"),
+        ("n1", [T("e", 0), T("f", 1), M("m4", 2)], None),
+    ]
+    path = str(tmp_path / "docs")
+    _docs_null_partition(spark, rows_in).write.parquet(path)
+    docs = spark.read.parquet(path)
+
+    # Spark's ln is java.lang.StrictMath.log; the fold calls the same
+    # function so the comparison is of the arithmetic, not of two libms
+    ln = spark.sparkContext._jvm.java.lang.StrictMath.log
+    kinds = RuleParams().kind_domain
+    counts: dict = {}
+    for _, spans, part in rows_in:
+        c = counts.setdefault(part, dict.fromkeys(kinds, 0))
+        for s in spans or []:
+            if s[0] in c:
+                c[s[0]] += 1
+    g = {k: sum(c[k] for c in counts.values()) for k in kinds}
+    g_tot = sum(g.values())
+
+    def fold(c):
+        eps = RuleParams().drift_epsilon
+        tot = sum(c.values())
+        pk = [(c[k] / tot if tot > 0 else 0.0) + eps for k in kinds]
+        qk = [(g[k] / g_tot if g_tot > 0 else 0.0) + eps for k in kinds]
+        psi = functools.reduce(operator.add, [(p - q) * ln(p / q) for p, q in zip(pk, qk)])
+        kl = functools.reduce(operator.add, [p * ln(p / q) for p, q in zip(pk, qk)])
+        return psi.hex(), kl.hex()
+
+    want = {part: fold(c) for part, c in counts.items()}
+    for params in (RuleParams(), RuleParams(kl_threshold=0.05)):
+        scores = drift_scores(docs, params)
+        # the plan as built, before AQE's runtime exchange reuse can fold
+        # a second scan of the same table into the first
+        plan = scores._jdf.queryExecution().executedPlan().toString()
+        assert sum(line.lstrip(" :+-").startswith("FileScan") for line in plan.splitlines()) == 1
+        got = {r["partition"]: (r["psi"].hex(), r["kl"].hex()) for r in scores.collect()}
+        assert got == want

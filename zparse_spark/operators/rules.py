@@ -574,31 +574,32 @@ def media_payload_violations(
 
     ``payload_verdicts`` is the output of ``multimodal.decode_verdicts``
     (media_ref, ok, error_kind) — decode classification runs ONCE per
-    payload row, never per referencing span. The rule itself is the R1
-    shape: prune the scan to (spans.media_ref, spans.offset), explode
-    only media spans, and join against the bad-ref set (undecodable ∪
-    referenced-but-absent), which is sparse in practice — AQE broadcasts
-    it. Referenced-but-absent needs one distinct over referenced refs
-    plus an anti-join against the payload key set — a shuffle of the
-    payload KEYS (not payloads) on media_ref; when the payload table is
-    authoritative-complete (ingest guarantees a row per ref), pass
-    ``check_missing=False`` to skip that whole branch and keep the rule
-    broadcast-only.
+    payload row, never per referencing span, and the verdict frame is
+    read once per plan (an opaque mapInPandas read twice crosses every
+    payload into Python twice). The rule is the R1 shape: prune the scan
+    to (spans.media_ref, spans.offset) and explode only media spans.
+    With ``check_missing`` those spans take one left join against the
+    verdicts' (media_ref, ok, error_kind), a side with no payload bytes
+    that AQE can broadcast; a span with no verdict row is 'missing', a
+    span matching a ``NOT ok`` row is that row's error_kind, and a null
+    ``ok`` passes. Duplicate verdict rows keep their multiplicity, as an
+    inner join against the bad rows would. When the payload table is
+    authoritative-complete (ingest guarantees a row per ref),
+    ``check_missing=False`` inner-joins only the ``NOT ok`` rows.
     """
     refs = _media_spans(docs)
-    undecodable = payload_verdicts.filter(~F.col("ok")).select("media_ref", "error_kind")
-    bad = undecodable
     if check_missing:
-        missing = (
-            refs.select("media_ref")
-            .distinct()
-            .join(payload_verdicts.select("media_ref"), "media_ref", "left_anti")
-            .withColumn("error_kind", F.lit("missing"))
+        verdicts = payload_verdicts.selectExpr(
+            "media_ref", "ok", "error_kind", "media_ref AS _pv_ref"
         )
-        bad = undecodable.unionByName(missing)
+        bad = refs.join(verdicts, "media_ref", "left").filter("_pv_ref IS NULL OR NOT ok")
+        error_kind = "CASE WHEN _pv_ref IS NULL THEN 'missing' ELSE error_kind END"
+    else:
+        undecodable = payload_verdicts.filter(~F.col("ok")).select("media_ref", "error_kind")
+        bad, error_kind = refs.join(undecodable, "media_ref"), "error_kind"
     return _violation_rows(
-        refs.join(bad, "media_ref"), "M1", ErrorKind.MEDIA_DECODE_FAILED,
-        "concat('media payload ', error_kind, ': ', media_ref)",
+        bad, "M1", ErrorKind.MEDIA_DECODE_FAILED,
+        f"concat('media payload ', {error_kind}, ': ', media_ref)",
     )
 
 
@@ -607,10 +608,15 @@ def drift_scores(docs: DataFrame, params: RuleParams | None = None) -> DataFrame
     pre-threshold surface, exposed so the oracle gate can compare the
     actual PSI values (not just the fired/not-fired verdict).
 
-    Scale shape: per-doc kind counts are computed in the map stage with
-    higher-order functions (no explode), so the shuffle input is
-    |docs| × |kinds| tiny rows → groupBy(partition, kind) → the global
-    side is a broadcast-sized |kinds| table.
+    Scale shape: one pruned scan of ``spans.kind`` (projected before the
+    explode, so nested-schema pruning reaches the scan and no text byte
+    is read), ``explode_outer`` so a doc with null or empty spans still
+    yields one null-kind row, then one groupBy(partition) with a
+    ``count_if`` per domain kind: ``per_part``, the per-partition kind
+    histogram, where a partition of span-less docs keeps its all-zero
+    row. The global side is ``sum(...) OVER ()`` over those
+    |partitions| rows, so ``per_part`` is built once. Counts are exact
+    bigints, so the doubles do not depend on the plan shape.
 
     Built from SQL text: the per-kind terms are a few hundred expression
     nodes, and as Column calls each would be a driver→JVM round trip.
@@ -621,33 +627,16 @@ def drift_scores(docs: DataFrame, params: RuleParams | None = None) -> DataFrame
     p = params or RuleParams()
     eps = _sql_double(p.drift_epsilon)
     kinds = list(p.kind_domain)
-    # per-doc counts per kind in ONE pass. The kinds array is projected
-    # with GetArrayStructFields (spans.kind) BEFORE the aggregate so
-    # nested-schema pruning reaches the scan: a HOF over the spans struct
-    # would read every text byte just to count kinds (measured 6x
-    # anti-scaling at 32 cores from the wasted decode bandwidth).
-    domain = ", ".join(_sql_str(k) for k in kinds)
-    zero = ", ".join("CAST(0 AS BIGINT)" for _ in kinds)
-    counts = (
-        f"aggregate(coalesce(_kinds, array()), array({zero}), (acc, k0) ->"
-        f" zip_with(acc, array({domain}), (c, k) -> c + CASE WHEN k0 = k THEN 1 ELSE 0 END))"
-    )
     c, g = [f"`c_{k}`" for k in kinds], [f"`g_{k}`" for k in kinds]
-    per_doc = (
-        docs.selectExpr("`partition`", "spans.kind AS _kinds")
-        .selectExpr("`partition`", f"{counts} AS _counts")
-        .selectExpr(
-            "`partition`",
-            *[f"element_at(_counts, {j + 1}) AS `_c_{k}`" for j, k in enumerate(kinds)],
-        )
-    )
     per_part = (
-        per_doc.groupBy("partition")
-        .agg(*[F.expr(f"sum(`_c_{k}`) AS {ck}") for k, ck in zip(kinds, c)])
+        docs.selectExpr("`partition`", "spans.kind AS _kinds")
+        .selectExpr("`partition`", "explode_outer(_kinds) AS _k")
+        .groupBy("partition")
+        .agg(*[F.expr(f"count_if(_k = {_sql_str(k)}) AS {ck}") for k, ck in zip(kinds, c)])
         .selectExpr("*", f"0 + {' + '.join(c)} AS _tot")
     )
-    glob = per_part.selectExpr(
-        *[f"sum({ck}) AS {gk}" for ck, gk in zip(c, g)], "sum(_tot) AS g_tot"
+    scored = per_part.selectExpr(
+        "*", *[f"sum({ck}) OVER () AS {gk}" for ck, gk in zip(c, g)], "sum(_tot) OVER () AS g_tot"
     )
     psi_terms, kl_terms = [], []
     for ck, gk in zip(c, g):
@@ -663,7 +652,7 @@ def drift_scores(docs: DataFrame, params: RuleParams | None = None) -> DataFrame
         # penalizes mass the partition has that the global lacks, the
         # direction that flags an over-represented kind in one shard
         kl_terms.append(f"({pk} * ln({pk} / {qk}))")
-    return per_part.crossJoin(F.broadcast(glob)).selectExpr(
+    return scored.selectExpr(
         "`partition`", f"{' + '.join(psi_terms)} AS psi", f"{' + '.join(kl_terms)} AS kl"
     )
 

@@ -3,11 +3,12 @@
 Lifecycle (SURVEY.md §3.4): read documents → span/doc rules (map-only,
 with referential fused in when the catalog broadcasts) ∪ uniqueness
 (single-phase count agg, map-side combine) ∪ referential (pruned explode
-+ sort-merge anti-join, big catalogs only) ∪ drift (two small aggs) →
++ sort-merge anti-join, big catalogs only) ∪ drift (one explode of
+spans.kind, one aggregate and a window over its per-partition rows) →
 violations table → verdict matrix. Each branch reads its own pruned
-scan of the columnar input: the bulk plan with R1 fused has six — the
+scan of the columnar input: the bulk plan with R1 fused has five — the
 full spans (span pack), the catalog's media_ref, U1's (doc_id,
-partition) and doc_id, and D1's spans.kind twice.
+partition) and doc_id, and D1's spans.kind.
 
 The per-(partition, rule) verdict matrix is the distributed analog of
 the reference's fixture-directory contract: every fixtures/valid/* must
@@ -50,9 +51,10 @@ class ValidationConfig:
     # opt-in M1: referenced media payloads must exist and decode
     # (violations() then needs the media_verdicts frame)
     enable_media_decode: bool = False
-    # M1's missing-payload branch costs one distinct + anti-join over the
-    # payload KEYS; when ingest guarantees a verdict row per referenced
-    # payload, set False to keep M1 broadcast-only. Part of rules_hash —
+    # M1's missing-payload check joins the media spans against every
+    # verdict row's key (a left join) instead of only the NOT ok rows;
+    # when ingest guarantees a verdict row per referenced payload, set
+    # False to join only the bad rows. Part of rules_hash —
     # two runs with different M1 semantics must never share a resume.
     media_check_missing: bool = True
     # opt-in F1: the same media_ref must carry the same span kind

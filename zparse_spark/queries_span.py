@@ -179,7 +179,9 @@ viol AS (
 )"""
 
 # D1 PSI scores, mirroring drift_scores term-for-term (same eps, same
-# left-to-right accumulation order over the kind domain)
+# left-to-right accumulation order over the kind domain) and in shape:
+# per-partition kind counts over the exploded spans, the global side
+# their sum
 _kc_cols = ",\n         ".join(
     f"sum(CASE WHEN kind = '{k}' THEN 1 ELSE 0 END) AS c_{k}" for k in SPAN_KIND_DOMAIN
 )
