@@ -79,7 +79,9 @@ def test_null_predicate_passes(spark):
 
 
 def test_engine_wiring_and_verdict_grid(spark):
-    cfg = ValidationConfig(check_constraints=(K_NONEMPTY, K_OFFSET), enable_drift=False)
+    cfg = ValidationConfig(
+        check_constraints=(K_NONEMPTY, K_OFFSET), enable_drift=False, enable_referential=False
+    )
     eng = ValidationEngine(cfg)
     docs = _fixture(spark)
     viol = eng.violations(docs)

@@ -3,7 +3,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from zparse_spark.operators.rules import cross_table_check_violations
+from zparse_spark.operators.constraints import cross_table_check_violations
 
 
 @pytest.fixture()

@@ -103,7 +103,7 @@ def test_no_python_udf_in_default_plan(spark):
     """Vectorization discipline (SURVEY.md §7.3): row-at-a-time Python
     (BatchEvalPython) is never allowed; since round 4 the default pack's
     one sanctioned Python stage is the Arrow-batched Pos line/col
-    derivation (functions/text.py::span_start_positions — measured 2.4×
+    derivation (operators/rules.py::span_start_positions — measured 2.4×
     an interpreted Catalyst fold; see
     test_plans.py::test_full_pack_python_eval_contract)."""
     docs = generate_documents(spark, n_docs=10, seed=1).drop("_fixture_class")
@@ -556,3 +556,73 @@ def test_sampled_validation(spark):
     # empty sample: counts are zero, estimates NULL
     none = sampled_validation(docs, eng, fraction=0.0, seed=3).collect()
     assert all(r["n_sampled"] == 0 and r["p_hat"] is None and r["ci_lo"] is None for r in none)
+
+
+def test_sampled_validation_feeds_m1_its_verdicts(spark):
+    """Screening with M1 on: the payload verdicts reach M1, so at
+    fraction=1.0 its cells count exactly the docs with a bad or missing
+    payload (d2 has two bad refs and counts once)."""
+    from tests.conftest import make_docs
+    from zparse_spark.functions import media_codecs
+    from zparse_spark.multimodal import decode_verdicts
+    from zparse_spark.plans.engine import sampled_validation
+
+    docs = make_docs(
+        spark,
+        [
+            ("d1", [("image", "", "m_good", 0)], "p0"),
+            ("d2", [("image", "", "m_bad", 0), ("image", "", "m_gone", 5)], "p0"),
+            ("d3", [("image", "", "m_gone", 0)], "p1"),
+            ("d4", [("text", "ok", None, 0)], "p1"),
+        ],
+    )
+    good = media_codecs.bmp_encode(media_codecs.synth_image(1))
+    pay = spark.createDataFrame(
+        [("m_good", "image", bytearray(good)), ("m_bad", "image", bytearray(good[:20]))],
+        "media_ref string, media_kind string, payload binary",
+    )
+    eng = ValidationEngine(
+        ValidationConfig(
+            enable_uniqueness=False, enable_referential=False, enable_drift=False,
+            enable_media_decode=True,
+        )
+    )
+    out = sampled_validation(docs, eng, fraction=1.0, seed=3, media_verdicts=decode_verdicts(pay))
+    m1 = {
+        r["partition"]: (r["n_total_docs"], r["n_sampled"], r["n_violating"])
+        for r in out.filter("rule_id = 'M1'").collect()
+    }
+    assert m1 == {"p0": (2, 2, 1), "p1": (2, 2, 1)}
+
+
+def _dangling_doc(spark):
+    from tests.conftest import make_docs
+
+    return make_docs(spark, [("d1", [("image", None, "m_dangling", 0)], "p0")])
+
+
+def test_validate_refuses_referential_without_catalog(spark):
+    """R1 on and no catalog: the one-shot gate raises instead of
+    reporting an R1 cell that passes without R1 having run."""
+    import pytest
+
+    eng = ValidationEngine(ValidationConfig(enable_drift=False))
+    with pytest.raises(ValueError, match="media_catalog is None"):
+        eng.validate(_dangling_doc(spark))
+
+
+def test_sampled_validation_refuses_missing_rule_inputs(spark):
+    """The screening tier refuses the same way: R1 on without a catalog,
+    and M1 on without payload verdicts."""
+    import pytest
+
+    from zparse_spark.plans.engine import sampled_validation
+
+    docs = _dangling_doc(spark)
+    with pytest.raises(ValueError, match="media_catalog is None"):
+        sampled_validation(docs, ValidationEngine(ValidationConfig(enable_drift=False)), 1.0)
+    m1 = ValidationEngine(
+        ValidationConfig(enable_referential=False, enable_drift=False, enable_media_decode=True)
+    )
+    with pytest.raises(ValueError, match="media_verdicts is None"):
+        sampled_validation(docs, m1, 1.0)

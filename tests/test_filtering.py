@@ -152,7 +152,8 @@ def test_split_into_windows_contract(spark):
 def test_upsample_by_weight(spark):
     from pyspark.sql import functions as F
 
-    from zparse_spark.operators.filtering import hash_unit, upsample_by_weight
+    from zparse_spark.operators.filtering import upsample_by_weight
+    from zparse_spark.plans.engine import hash_unit
 
     df = spark.createDataFrame(
         [(1, 2.0), (2, 0.0), (3, -1.0), (4, 0.5), (5, 3.7), (6, 99.0)],

@@ -197,6 +197,30 @@ def test_referential_without_catalog_is_refused(spark, tmp_path):
     assert not os.path.exists(out)
 
 
+
+def test_media_decode_without_verdicts_is_refused(spark, tmp_path):
+    """M1 on and no payload verdicts: refused before the manifest read
+    and before any job (no pending-partition count runs first), and
+    nothing is written."""
+    import pytest
+
+    from tests.conftest import make_docs
+
+    out = str(tmp_path / "run11")
+    docs = make_docs(spark, [("d1", [("image", None, "m1", 0)], "p0")])
+    eng = ValidationEngine(
+        ValidationConfig(enable_referential=False, enable_drift=False, enable_media_decode=True)
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("media_decode_no_verdicts", "run_with_manifest")
+    try:
+        with pytest.raises(ValueError, match="media_verdicts is None"):
+            run_with_manifest(eng, docs, None, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("media_decode_no_verdicts") == []
+    assert not os.path.exists(out)
+
 # Spark jobs of one resume below (one committed partition, one appended):
 # 14 with D1 reading spans.kind once, so one job of headroom; 15 when D1
 # built its per-partition histogram twice, and 17 when a distinct() found

@@ -385,7 +385,7 @@ def test_session_continuation_ops_plan_discipline(spark, docs_path):
     from zparse_spark.operators.asof import interval_overlap_join
     from zparse_spark.operators.checksum import table_checksum
     from zparse_spark.operators.editdist import bounded_edit_distance_join
-    from zparse_spark.operators.rules import cross_table_check_violations
+    from zparse_spark.operators.constraints import cross_table_check_violations
     from zparse_spark.operators.stats import key_gaps
 
     docs = spark.read.parquet(docs_path).select(
@@ -494,7 +494,7 @@ def test_session3_ops_plan_discipline(spark, docs_path):
     import datetime as dt
 
     from zparse_spark.functions.text import distinctive_terms, nfc_audit
-    from zparse_spark.operators.rules import asof_referential_violations
+    from zparse_spark.operators.constraints import asof_referential_violations
     from zparse_spark.operators.stats import join_cardinality_profile, sampled_audit
 
     docs = spark.read.parquet(docs_path)

@@ -22,7 +22,7 @@ def _run(spark):
             ("d3", [("text", "fine", None, 0)], "p1"),
         ],
     )
-    eng = ValidationEngine(ValidationConfig(enable_drift=False))
+    eng = ValidationEngine(ValidationConfig(enable_drift=False, enable_referential=False))
     viol = eng.violations(docs)
     return eng.verdicts(docs, viol), viol
 

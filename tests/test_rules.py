@@ -425,7 +425,7 @@ def test_aggregate_reconciliation_hand_case(spark):
     job, not a tolerance violation)."""
     from pyspark.sql import functions as F
 
-    from zparse_spark.operators.rules import aggregate_reconciliation
+    from zparse_spark.operators.constraints import aggregate_reconciliation
 
     child = spark.createDataFrame(
         [(1, 60.0), (1, 40.0), (2, 110.0), (3, 10.5), (4, 7.0)], "k long, v double"
@@ -447,7 +447,7 @@ def test_aggregate_reconciliation_zero_parent(spark):
     0); rel_err is NULL (no scale), never a divide-by-zero."""
     from pyspark.sql import functions as F
 
-    from zparse_spark.operators.rules import aggregate_reconciliation
+    from zparse_spark.operators.constraints import aggregate_reconciliation
 
     child = spark.createDataFrame([(1, 2.0)], "k long, v double")
     parent = spark.createDataFrame([(1, 0.0)], "k long, p double")
@@ -460,7 +460,7 @@ def test_fd_confidence_majority_and_ties(spark):
     majority breaks to MIN dependent. x3: perfect FD -> filtered out at
     min_confidence. NULL determinant skipped; NULL dependent is a real
     variant."""
-    from zparse_spark.operators.rules import fd_confidence
+    from zparse_spark.operators.constraints import fd_confidence
 
     rows = (
         [("x1", "a")] * 3 + [("x1", "b")]
@@ -484,7 +484,7 @@ def test_transition_violations_hand_case(spark):
     under ties, users independent."""
     from datetime import datetime
 
-    from zparse_spark.operators.rules import transition_violations
+    from zparse_spark.operators.constraints import transition_violations
 
     t = lambda s: datetime(2026, 1, 1, 0, 0, s)  # noqa: E731
     events = spark.createDataFrame(
@@ -513,7 +513,7 @@ def test_transition_violations_hand_case(spark):
 
 
 def test_rule_cooccurrence_hand_case(spark):
-    from zparse_spark.operators.rules import rule_cooccurrence
+    from zparse_spark.operators.constraints import rule_cooccurrence
 
     rows = [
         # doc 1 fails S2+S4 (plus a second S2 row that must dedup)
@@ -562,10 +562,8 @@ def test_drift_scores_empty_partition_no_crash(spark):
 def test_conditional_fd_scopes_to_condition(spark):
     from pyspark.sql import functions as F
 
-    from zparse_spark.operators.rules import (
-        conditional_fd_violations,
-        functional_dependency_violations,
-    )
+    from zparse_spark.operators.constraints import conditional_fd_violations
+    from zparse_spark.operators.rules import functional_dependency_violations
 
     rows = [
         # scope in ("a" rows): k1 has 2 variants, k2 has 1
@@ -592,7 +590,7 @@ def test_conditional_fd_scopes_to_condition(spark):
 def test_asof_referential_violation_classes(spark):
     import datetime as dt
 
-    from zparse_spark.operators.rules import asof_referential_violations
+    from zparse_spark.operators.constraints import asof_referential_violations
 
     d = dt.date
     dim = spark.createDataFrame(
@@ -684,7 +682,7 @@ def test_media_refcounts_and_orphans(spark):
     """Catalog entries keep zero counts (orphans = GC shortlist);
     multi-span and multi-doc references accumulate; refs outside the
     catalog never appear (that's R1's direction, not this one)."""
-    from zparse_spark.operators.rules import media_refcounts, orphan_media
+    from zparse_spark.operators.constraints import media_refcounts, orphan_media
 
     docs = spark.createDataFrame(
         [

@@ -182,7 +182,7 @@ def main(argv: list[str] | None = None) -> int:
 
         rates = sampled_validation(
             docs, engine, args.sample_fraction, seed=args.sample_seed,
-            media_catalog=catalog,
+            media_catalog=catalog, media_verdicts=media_verdicts,
         )
         rates.write.mode("overwrite").parquet(f"{args.out}/sampled_rates")
         back = spark.read.parquet(f"{args.out}/sampled_rates")
@@ -254,19 +254,13 @@ def main(argv: list[str] | None = None) -> int:
     if args.emit_contract:
         from pyspark.sql import functions as F  # noqa: F811
 
+        from zparse_spark.operators.rules import span_text_bytes
         from zparse_spark.plans.contract import export_contract
 
         doc_level = docs.select(
             "partition",
             F.size("spans").alias("n_spans"),
-            F.coalesce(
-                F.aggregate(
-                    "spans",
-                    F.lit(0).cast("long"),
-                    lambda a, s: a + F.octet_length(F.coalesce(s["text"], F.lit(""))),
-                ),
-                F.lit(0),
-            ).alias("total_text_bytes"),
+            span_text_bytes().alias("total_text_bytes"),
         )
         text = export_contract(
             doc_level,

@@ -19,6 +19,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+# valbench/run.py imports the gate's line/col UDF from here; it lives in operators.rules
+from zparse_spark.operators.rules import span_start_positions  # noqa: F401
+
 # --------------------------------------------------------------------------
 # token counting — whitespace tokens and a BPE-ish word/punct regex
 # --------------------------------------------------------------------------
@@ -371,45 +374,6 @@ def _scan_text(s: str | None) -> str | None:
 def validate_text_udf(texts: pd.Series) -> pd.Series:
     """Arrow-vectorized exact validator: error-kind string or NULL."""
     return texts.map(_scan_text)
-
-
-def span_start_positions(texts: Column) -> Column:
-    """Per-span (line, col) start positions in the canonical document
-    reconstruction (span texts concatenated in array order) — the
-    reference ``Pos`` contract (error.rs:8-18, offset:line:col) lifted
-    to the span table. Input: the pruned ``spans.text`` array column
-    (GetArrayStructFields, so the scan reads only text). Output:
-    ``array<struct<line:int,col:int>>``, same length as the input array.
-
-    Arrow-batched pandas UDF: the running fold (line += newlines, col
-    resets after a newline else accumulates) is inherently sequential
-    per document, which Catalyst can only run as an interpreted HOF
-    lambda — measured 2.4× slower than this path at 100k docs/local[8]
-    (str.count/str.rfind are C-level). Map-only: no shuffle, the
-    payload crossing Arrow is the text the span rules read anyway.
-    """
-
-    @pandas_udf("array<struct<line:int,col:int>>")
-    def _pos(arrs: pd.Series) -> pd.Series:
-        out = []
-        for arr in arrs:
-            if arr is None:
-                out.append([])
-                continue
-            line, col, acc = 1, 1, []
-            for t in arr:
-                acc.append((line, col))
-                t = t or ""
-                k = t.count("\n")
-                if k:
-                    line += k
-                    col = len(t) - t.rfind("\n")
-                else:
-                    col += len(t)
-            out.append(acc)
-        return pd.Series(out)
-
-    return _pos(texts)
 
 
 # ---------------------------------------------------------------------------
@@ -1573,7 +1537,7 @@ def vocab_growth_curve(
     """
     from pyspark.sql import functions as F
 
-    from zparse_spark.operators.filtering import hash_unit
+    from zparse_spark.plans.engine import hash_unit
 
     fr = sorted(set(float(f) for f in fractions))
     if not fr or fr[-1] > 1.0 or fr[0] <= 0.0:

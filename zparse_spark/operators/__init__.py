@@ -4,4 +4,3 @@ from zparse_spark.operators.rules import (  # noqa: F401
     referential_violations,
     drift_violations,
 )
-from zparse_spark.operators.canonical import canonicalize_spans, span_fingerprint  # noqa: F401

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from zparse_spark.functions.text import lang_guess, quality_score, token_count
+from zparse_spark.plans.engine import hash_unit
 
 REASONS = ("too_short", "too_long", "low_quality", "wrong_lang")
 
@@ -181,19 +182,6 @@ def token_budget_pack(
     )
     packed = pruned.withColumn("cum_tokens", (F.col("_before") + F.sum(t).over(wr)))
     return packed.filter(F.col("cum_tokens") <= budget).drop("_bkt", "_before")
-
-
-def hash_unit(key, seed: int = 0):
-    """Deterministic uniform-[0,1) value per key: first 8 hex nibbles of
-    md5(key ‖ ':' ‖ seed) over 2^32 — the same engine-portable idiom as
-    cap_hot_buckets' md5 sampler, so a DuckDB/any-SQL twin reproduces it
-    bit-for-bit. One codegen expression, no rng state."""
-    hv = F.conv(
-        F.substring(F.md5(F.concat_ws(":", F.col(key).cast("string") if isinstance(key, str) else key.cast("string"), F.lit(seed))), 1, 8),
-        16,
-        10,
-    ).cast("double")
-    return hv / float(0x100000000)
 
 
 def hash_sample(df: DataFrame, fraction: float, key_col: str = "doc_id", seed: int = 0) -> DataFrame:

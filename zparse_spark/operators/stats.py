@@ -563,7 +563,7 @@ def wasserstein_drift_scores(
 def _cms_buckets(col: str, width: int, depth: int):
     """The depth Count-Min bucket ids for a value, as an array column:
     bucket_d(v) = md5-nibble(v ':' d) mod width — the SAME engine-portable
-    hash idiom as filtering.hash_unit / cap_hot_buckets, so a DuckDB (or
+    hash idiom as plans.engine.hash_unit / cap_hot_buckets, so a DuckDB (or
     any-SQL) twin reproduces every cell bit-for-bit."""
     return F.array(
         *[
@@ -2003,7 +2003,7 @@ def sampled_audit(
     """
     if not (0.0 < fraction <= 1.0):
         raise ValueError(f"fraction must be in (0, 1], got {fraction}")
-    from zparse_spark.operators.filtering import hash_unit
+    from zparse_spark.plans.engine import hash_unit
 
     pred = F.expr(violation_pred) if isinstance(violation_pred, str) else violation_pred
     sampled = df.filter(hash_unit(key_col, seed) < fraction)

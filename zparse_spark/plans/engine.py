@@ -37,6 +37,7 @@ from zparse_spark.operators.rules import (
     media_payload_violations,
     referential_violations,
     span_rule_violations,
+    span_text_bytes,
     uniqueness_violations,
 )
 from zparse_spark.schema import union_violations
@@ -114,6 +115,27 @@ class ValidationEngine:
         # reserved rule_id in a user check is a config error
         _validate_checks(self.config.check_constraints)
 
+    def _check_inputs(
+        self, media_catalog: DataFrame | None, media_verdicts: DataFrame | None
+    ) -> None:
+        """Never skip silently: raise when an enabled rule lacks its input
+        (R1 the catalog, M1 the payload verdicts). Skipping it would show
+        the rule passing on every partition of the dense verdict grid
+        without it having run, and a resumed run would commit those
+        partitions as done under this rules_hash and never re-check them."""
+        c = self.config
+        if c.enable_referential and media_catalog is None:
+            raise ValueError(
+                "enable_referential=True but media_catalog is None — pass the "
+                "media catalog or build the engine with enable_referential=False"
+            )
+        if c.enable_media_decode and media_verdicts is None:
+            raise ValueError(
+                "enable_media_decode=True but media_verdicts is None — pass "
+                "decode_verdicts(payloads) (zparse_spark.multimodal) or build "
+                "the engine with enable_media_decode=False"
+            )
+
     # -- plan builders ------------------------------------------------
 
     def violations(
@@ -127,18 +149,10 @@ class ValidationEngine:
         restricts to the partition-decomposable rules (span/doc, R1, M1,
         K) — the resumable runner evaluates those on pending partitions
         only while re-running the table-wide rules (``_table_rules``) over
-        the full table (see plans.manifest)."""
+        the full table (see plans.manifest). R1 without ``media_catalog``
+        or M1 without ``media_verdicts`` raises ``ValueError``."""
+        self._check_inputs(media_catalog, media_verdicts)
         c = self.config
-        if c.enable_media_decode and media_verdicts is None:
-            # never skip silently: the dense verdict grid would show M1
-            # passing on every partition without the check having run, and
-            # the manifest would commit those partitions as done under this
-            # rules_hash — resume would then never re-check them
-            raise ValueError(
-                "enable_media_decode=True but media_verdicts is None — pass "
-                "decode_verdicts(payloads) (zparse_spark.multimodal) or build "
-                "the engine with enable_media_decode=False"
-            )
         # R1 fuses into the span-rule explode (one scan saved) when a
         # count probe shows the catalog key set is under
         # broadcast_max_catalog_rows; otherwise it runs as the standalone
@@ -148,15 +162,14 @@ class ValidationEngine:
         # threshold+1 rows either way (on a real Iceberg catalog, table
         # metadata answers this for free; the bounded probe is the
         # storage-agnostic fallback).
-        ref_on = c.enable_referential and media_catalog is not None
-        fuse_ref = ref_on and (
+        fuse_ref = c.enable_referential and (
             media_catalog.limit(c.broadcast_max_catalog_rows + 1).count()
             <= c.broadcast_max_catalog_rows
         )
         parts = [
             span_rule_violations(docs, c.params, media_catalog=media_catalog if fuse_ref else None)
         ]
-        if ref_on and not fuse_ref:
+        if c.enable_referential and not fuse_ref:
             parts.append(referential_violations(docs, media_catalog, "smj"))
         if c.enable_media_decode:
             parts.append(
@@ -230,15 +243,12 @@ class ValidationEngine:
         scalar counters bytes_parsed/depth, json/parser.rs:85-86, lifted
         to per-partition table stats)."""
         spans = F.coalesce(F.col("spans"), F.array())
-        text_bytes = F.aggregate(
-            spans, F.lit(0).cast("long"), lambda a, s: a + F.coalesce(F.octet_length(s["text"]), F.lit(0))
-        )
         n_media = F.size(F.filter(spans, lambda s: s["media_ref"].isNotNull()))
         return (
             docs.select(
                 "partition",
                 F.size(spans).alias("_n_spans"),
-                text_bytes.alias("_bytes"),
+                span_text_bytes().alias("_bytes"),
                 n_media.alias("_n_media"),
             )
             .groupBy("partition")
@@ -355,6 +365,19 @@ def quarantine_split(
     return clean, quarantined
 
 
+def hash_unit(key, seed: int = 0):
+    """Deterministic uniform-[0,1) value per key: first 8 hex nibbles of
+    md5(key ‖ ':' ‖ seed) over 2^32 — the same engine-portable idiom as
+    cap_hot_buckets' md5 sampler, so a DuckDB/any-SQL twin reproduces it
+    bit-for-bit. One codegen expression, no rng state."""
+    hv = F.conv(
+        F.substring(F.md5(F.concat_ws(":", F.col(key).cast("string") if isinstance(key, str) else key.cast("string"), F.lit(seed))), 1, 8),
+        16,
+        10,
+    ).cast("double")
+    return hv / float(0x100000000)
+
+
 def sampled_validation(
     docs: DataFrame,
     engine: ValidationEngine,
@@ -362,6 +385,7 @@ def sampled_validation(
     seed: int = 0,
     media_catalog: DataFrame | None = None,
     z: float = 1.96,
+    media_verdicts: DataFrame | None = None,
 ) -> DataFrame:
     """Estimate per-(partition, rule) violation-rate with confidence
     bounds from a deterministic document sample — the cheap screening
@@ -385,14 +409,18 @@ def sampled_validation(
     comparisons are exact; cells with an empty sample report NULL
     estimates rather than fabricating a rate.
 
+    ``media_catalog`` and ``media_verdicts`` feed R1 and M1 as in
+    ``ValidationEngine.violations``, which raises when an enabled rule's
+    input is missing.
+
     Output: (partition, rule_id, n_total_docs, n_sampled, n_violating,
     p_hat, ci_lo, ci_hi, est_violating_docs).
     """
-    from zparse_spark.operators.filtering import hash_unit
-
     key = F.concat_ws("|", F.col("partition"), F.col("doc_id"))
     sample = docs.filter(hash_unit(key, seed) < fraction)
-    viol = engine.violations(sample, media_catalog, include_table_rules=False)
+    viol = engine.violations(
+        sample, media_catalog, include_table_rules=False, media_verdicts=media_verdicts
+    )
     table_only = _table_rules(engine.config)
     rules = [r for r in engine.active_rule_ids() if r not in table_only]
     spark = docs.sparkSession

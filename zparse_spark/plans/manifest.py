@@ -183,17 +183,14 @@ def run_with_manifest(
     read pruned scans (doc_id/partition, spans.kind), so the full-table
     pass does not re-decode text bytes.
 
-    R1 without ``media_catalog`` raises ``ValueError`` before any job:
-    every partition would commit with R1 passing under the same
-    ``rules_hash`` a run with the catalog uses, and that run would then
+    R1 without ``media_catalog`` or M1 without ``media_verdicts`` raises
+    ``ValueError`` before the manifest read and before any job: every
+    partition would commit with the rule passing under the same
+    ``rules_hash`` a run with the input uses, and that run would then
     skip them.
     """
     manifest = Manifest(out_dir)
-    if engine.config.enable_referential and media_catalog is None:
-        raise ValueError(
-            "enable_referential=True but media_catalog is None — pass the "
-            "media catalog or build the engine with enable_referential=False"
-        )
+    engine._check_inputs(media_catalog, media_verdicts)
     spark = docs.sparkSession
     rh = engine.config.rules_hash()
     done = manifest.committed_partitions(spark, rh)

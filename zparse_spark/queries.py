@@ -1167,7 +1167,7 @@ def events_transition_violations(spark, sf_dir):
     (here: signup only after error). One lag window = one shuffle on
     user_id, allowed set a codegen literal array; the oracle expresses
     the same machine as its complement predicate."""
-    from zparse_spark.operators.rules import transition_violations
+    from zparse_spark.operators.constraints import transition_violations
 
     return transition_violations(_t(spark, sf_dir, "events"), _ALLOWED_TRANSITIONS)
 
@@ -1484,11 +1484,11 @@ def reconcile_orders_lineitem(spark, sf_dir):
     true sums and corrupts every 37th orderkey by +20%, so exactly the
     planted keys violate at rel_tol=0.05 (rel_err ≈ 0.1667) and the inner
     join keeps the check orthogonal to R1. See
-    operators/rules.py::aggregate_reconciliation for the 100 TB shape
+    operators/constraints.py::aggregate_reconciliation for the 100 TB shape
     (one map-side-combined child shuffle to parent cardinality, SMJ,
     violation-sparse output, round-before-compare determinism contract).
     """
-    from zparse_spark.operators.rules import aggregate_reconciliation
+    from zparse_spark.operators.constraints import aggregate_reconciliation
 
     li = _t(spark, sf_dir, "lineitem")
     net = F.sum(
@@ -1708,10 +1708,10 @@ def fd_confidence_source_lang(spark, sf_dir):
     fd_documents_source_lang violation enumeration ("mostly holds" vs
     "must hold"). Every multi-lingual source lands below the 0.99
     threshold with its majority language named. See
-    operators/rules.py::fd_confidence — groupBy(X,Y) map-side combine
+    operators/constraints.py::fd_confidence — groupBy(X,Y) map-side combine
     to the distinct-pair table, window + filter on that reduced table.
     """
-    from zparse_spark.operators.rules import fd_confidence
+    from zparse_spark.operators.constraints import fd_confidence
 
     return fd_confidence(
         _t(spark, sf_dir, "documents"), "source", "lang", min_confidence=0.99
@@ -6343,7 +6343,7 @@ def overlap_shipment_windows(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Cross-table CHECK constraint (operators/rules.py cross_table_check_violations)
+# Cross-table CHECK constraint (operators/constraints.py cross_table_check_violations)
 # ---------------------------------------------------------------------------
 
 
@@ -6369,7 +6369,7 @@ def check_lineitem_ship_after_order(spark, sf_dir):
     columns through the exchange); ANSI NULL-passes semantics; the
     29k-violation output proves the check exercises the join, not an
     empty fixture."""
-    from zparse_spark.operators.rules import cross_table_check_violations
+    from zparse_spark.operators.constraints import cross_table_check_violations
 
     li = _t(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("orderkey"),
@@ -6894,7 +6894,7 @@ def profile_value_patterns(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Conditional functional dependency (operators/rules.py
+# Conditional functional dependency (operators/constraints.py
 # conditional_fd_violations — CFD, the scoped strengthening of X31)
 # ---------------------------------------------------------------------------
 
@@ -6932,7 +6932,7 @@ def fd_conditional_long_docs(spark, sf_dir):
     pair shuffle (predicate pushes to the scan), so the refinement is
     strictly cheaper than the global FD; everything downstream is the
     X31 machinery verbatim — bounded examples, no per-key state."""
-    from zparse_spark.operators.rules import conditional_fd_violations
+    from zparse_spark.operators.constraints import conditional_fd_violations
 
     d = _t(spark, sf_dir, "documents")
     return conditional_fd_violations(d, "n_chars >= 400", "source", "lang")
@@ -6985,7 +6985,7 @@ def profile_join_cardinality(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Temporal (SCD2) referential integrity (operators/rules.py
+# Temporal (SCD2) referential integrity (operators/constraints.py
 # asof_referential_violations) and audit-by-sampling with Wilson bounds
 # (operators/stats.py sampled_audit)
 # ---------------------------------------------------------------------------
@@ -7045,7 +7045,7 @@ def referential_asof_supplier_versions(spark, sf_dir):
     → ambiguous_version overlaps). Fact side reduces to distinct
     (key, ts) pairs first — the only fact-sized shuffle — then a
     broadcast key-equi join with the window predicate in codegen."""
-    from zparse_spark.operators.rules import asof_referential_violations
+    from zparse_spark.operators.constraints import asof_referential_violations
 
     s = (
         _t(spark, sf_dir, "supplier")
@@ -9420,7 +9420,7 @@ def corpus_capture_recapture(spark, sf_dir):
     single-crawl count can give; here the truth is known, so rel_error
     is emitted as the estimator's own calibration. One scan, two hash
     flags, a 1-row aggregate, one trailing division."""
-    from zparse_spark.operators.filtering import hash_unit
+    from zparse_spark.plans.engine import hash_unit
 
     d = _t(spark, sf_dir, "documents").select(
         hash_unit("doc_id", 101).alias("u1"), hash_unit("doc_id", 202).alias("u2")
@@ -10282,7 +10282,7 @@ def dedup_review_sample(spark, sf_dir):
     from pyspark.sql import Window
 
     from zparse_spark.operators.dedup import ngram_jaccard_pairs
-    from zparse_spark.operators.filtering import hash_unit
+    from zparse_spark.plans.engine import hash_unit
 
     d = (
         _t(spark, sf_dir, "documents")

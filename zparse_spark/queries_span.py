@@ -1234,7 +1234,7 @@ def span_pack_file_sizing(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Rule co-occurrence forensics (operators/rules.py::rule_cooccurrence)
+# Rule co-occurrence forensics (operators/constraints.py::rule_cooccurrence)
 # ---------------------------------------------------------------------------
 
 _COOC_SQL = f"""WITH{_SP_CTE},{_VIOL_CTE},
@@ -1271,7 +1271,7 @@ def span_pack_rule_cooccurrence(spark, sf_dir):
     eng = ValidationEngine(ValidationConfig(params=_PARAMS, enable_drift=False))
     viol = eng.violations(docs, cat)
 
-    from zparse_spark.operators.rules import rule_cooccurrence
+    from zparse_spark.operators.constraints import rule_cooccurrence
 
     return rule_cooccurrence(viol, n_docs=docs.count())
 
@@ -1336,7 +1336,7 @@ def span_pack_media_orphans(spark, sf_dir):
     to a catalog-bounded count table in one map-side-combined groupBy;
     the catalog left-joins that compact table, so orphans survive as
     zeros and nothing doc-sized shuffles twice."""
-    from zparse_spark.operators.rules import media_refcounts
+    from zparse_spark.operators.constraints import media_refcounts
 
     docs, cat = _pack_input(spark)
     return media_refcounts(docs, cat).filter(F.col("n_refs") <= 2)

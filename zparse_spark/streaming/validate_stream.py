@@ -48,6 +48,11 @@ def validate_stream(
     ``media_verdicts`` (static, from ``decode_verdicts`` over the payload
     table) enables M1 per microbatch — a stream-static join, the standard
     Structured Streaming dimension pattern.
+
+    Each microbatch runs ``ValidationEngine.violations``, so the stream
+    inherits its refusal: R1 on without ``media_catalog`` or M1 on
+    without ``media_verdicts`` raises ``ValueError`` in the first
+    microbatch, and the query stops with it.
     """
     eng = engine or ValidationEngine()
 
