@@ -270,6 +270,47 @@ def test_plan_build_py4j_budget(spark):
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
 
 
+# Spark jobs and stages of one bulk gate below (violations -> parquet
+# sink -> verdict grid, R1 fused, default rules): 14 jobs and 22
+# stages, plus one of each as headroom.
+BULK_JOB_BUDGET = 15
+BULK_STAGE_BUDGET = 23
+
+
+def test_bulk_gate_job_and_stage_budget(spark, tmp_path):
+    """Each Spark job and stage is a fixed cost per gate call: count those
+    of one bulk gate (the catalog probe, the sink write, the grid) through
+    a statusTracker job group, and check none ran outside the group."""
+    from zparse_spark.schema import VIOLATION_SCHEMA
+
+    gen = generate_documents(spark, n_docs=100, seed=5, n_partitions=2).drop("_fixture_class")
+    gen.write.parquet(str(tmp_path / "docs"))
+    generate_media_catalog(spark).write.parquet(str(tmp_path / "catalog"))
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    cat = spark.read.parquet(str(tmp_path / "catalog"))
+    eng = ValidationEngine()
+    sink = str(tmp_path / "sink")
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()  # the status store lags the scheduler
+    bus.waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("bulk_gate_job_budget", "bulk gate")
+    try:
+        eng.violations(docs, cat).write.mode("overwrite").parquet(sink)
+        grid = eng.verdicts(docs, spark.read.schema(VIOLATION_SCHEMA).parquet(sink)).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    bus.waitUntilEmpty()
+    assert len(grid) == 2 * len(eng.active_rule_ids())
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    jobs = tracker.getJobIdsForGroup("bulk_gate_job_budget")
+    stages = {st for j in jobs for st in tracker.getJobInfo(j).stageIds}
+    assert len(jobs) <= BULK_JOB_BUDGET, len(jobs)
+    assert len(stages) <= BULK_STAGE_BUDGET, len(stages)
+
+
 def test_verdict_diff_statuses(spark):
     """All five diff statuses from hand-built verdict matrices."""
     from zparse_spark.plans.engine import verdict_diff

@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from zparse_spark.plans.engine import ValidationConfig, ValidationEngine
 from zparse_spark.plans.manifest import Manifest, run_with_manifest
 from zparse_spark.sources.datagen import generate_documents, generate_media_catalog
@@ -107,6 +109,79 @@ def test_crash_rerun_does_not_duplicate_violations(spark, tmp_path):
     assert len(rerun) == 4
     got = Manifest(out).read_violations(spark, rh).count()
     assert got == expected
+
+
+def test_crash_rerun_of_now_clean_partitions_drops_stale_rows(spark, tmp_path):
+    """A crash between the sink write and the commit, then the docs are
+    fixed: the rerun re-validates the partitions and writes no rows for
+    them. Dynamic overwrite alone would keep their stale rows (it replaces
+    only the partitions it writes), so the readback would still report
+    violations a full run does not. Partition values need escaping in
+    directory names (``/``, ``=``, ``%``, a literal ``%2F``) or are null;
+    a committed partition with violations keeps its rows."""
+    import json
+
+    from tests.test_rules import _docs_null_partition
+
+    out = str(tmp_path / "run12")
+    bad = [("text", "hello", None, 5), ("text", "world", None, 2)]  # S1: offsets regress
+    good = [("text", "hello", None, 0), ("text", "world", None, 6)]
+    crashed = ["a/b", "c=d", "e%f", "g%2Fh", None]
+    eng = ValidationEngine(ValidationConfig(enable_drift=False, enable_referential=False))
+    rh = eng.config.rules_hash()
+
+    def table(fixed):
+        rows = [(f"d{i}", good if fixed else bad, p) for i, p in enumerate(crashed)]
+        return _docs_null_partition(spark, rows + [("k", bad, "kept"), ("c", good, "clean")])
+
+    assert set(run_with_manifest(eng, table(False), None, out)) == {*crashed, "kept", "clean"}
+    path = os.path.join(out, "manifest.jsonl")
+    with open(path) as f:
+        lines = [ln for ln in f if json.loads(ln)["partition"] not in crashed]
+    with open(path, "w") as f:
+        f.writelines(lines)  # the crashed partitions' commits are lost
+
+    fixed = table(True)
+    assert set(run_with_manifest(eng, fixed, None, out)) == set(crashed)
+    m = Manifest(out)
+    full = eng.violations(fixed)
+    got = m.read_violations(spark, rh).select(*full.columns)
+    assert got.count() == full.count() == 1  # kept's S1 row
+    assert got.exceptAll(full).count() == 0 and full.exceptAll(got).count() == 0
+    last = {r["partition"]: r for r in m._read_jsonl()[0]}
+    assert {p: last[p]["n_violations"] for p in crashed} == dict.fromkeys(crashed, 0)
+    # the committed null partition is matched by the pending filter too
+    assert run_with_manifest(eng, fixed, None, out) == []
+
+
+@pytest.mark.parametrize("failing", ["violations", "table_violations"])
+def test_failing_pass_commits_nothing(spark, tmp_path, monkeypatch, failing):
+    """The pending pass (``violations``) and the table pass
+    (``table_violations``) run concurrently. When either raises,
+    run_with_manifest waits for the other, re-raises the error and commits
+    nothing: manifest.jsonl is byte-identical and no job is still running
+    when the call returns."""
+    out = str(tmp_path / "run13")
+    docs = generate_documents(spark, n_docs=100, seed=5, n_partitions=2).drop("_fixture_class")
+    cat = generate_media_catalog(spark)
+    parts = sorted(r["partition"] for r in docs.select("partition").distinct().collect())
+    eng = ValidationEngine()
+    run_with_manifest(eng, docs.filter(docs.partition == parts[0]), cat, out)
+    path = os.path.join(out, "manifest.jsonl")
+    with open(path, "rb") as f:
+        before = f.read()
+
+    def fail(*args, **kwargs):
+        raise RuntimeError(f"{failing} failed")
+
+    monkeypatch.setattr(eng, failing, fail)
+    with pytest.raises(RuntimeError, match=f"^{failing} failed$"):
+        run_with_manifest(eng, docs, cat, out)
+    sc = spark.sparkContext
+    _drain_listener_bus(sc)
+    assert sc.statusTracker().getActiveJobsIds() == []
+    with open(path, "rb") as f:
+        assert f.read() == before
 
 
 def test_torn_manifest_tail_revalidates_last_partition(spark, tmp_path):
@@ -234,6 +309,12 @@ RESUME_M1_JOB_BUDGET = 16
 RESUME_M1_STAGE_BUDGET = 24
 
 
+def _drain_listener_bus(sc):
+    """Wait until the status store has seen every scheduler event posted
+    so far: it is fed asynchronously, so it lags the jobs."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+
+
 def _resume_jobs_and_stages(spark, eng, docs, cat, out, group, **kw):
     """Commit the first partition, then resume over all of ``docs`` under
     job group ``group``; returns that resume's (jobs, stages) as
@@ -243,12 +324,19 @@ def _resume_jobs_and_stages(spark, eng, docs, cat, out, group, **kw):
     assert run_with_manifest(eng, first, cat, out, **kw) == parts[:1]
 
     sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    _drain_listener_bus(sc)
+    ungrouped = set(tracker.getJobIdsForGroup(None))
     sc.setJobGroup(group, "run_with_manifest")
     try:
         assert run_with_manifest(eng, docs, cat, out, **kw) == parts[1:]
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    tracker = sc.statusTracker()
+    _drain_listener_bus(sc)
+    # every job ran under the caller's group: a pass thread that lost the
+    # group would run its jobs outside it, and the budgets below would
+    # pass on a count that is too low
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
     jobs = tracker.getJobIdsForGroup(group)
     stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
     return len(jobs), len(stages)

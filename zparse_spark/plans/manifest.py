@@ -9,15 +9,21 @@ remainder (SURVEY.md §4.3).
 Sink layout (all namespaced by rules_hash, so a rule change can never
 mix old-rule rows into a new run's readback):
 
-    violations/rules_hash=<rh>/partition=<p>/   span/doc/R1 rules —
-        partition-decomposable, committed per partition via dynamic
+    violations/rules_hash=<rh>/partition=<p>/   span/doc/R1/M1/K rules —
+        partition-decomposable, committed per partition: a pending
+        partition's directory is deleted, then rewritten via dynamic
         partition overwrite (re-validation REPLACES the partition's
-        files; crash-and-rerun is idempotent)
-    violations_table/rules_hash=<rh>/           U1/D1 — table-wide
+        files, also when it now has no violations; crash-and-rerun is
+        idempotent)
+    violations_table/rules_hash=<rh>/           U1/D1/F1 — table-wide
         rules, re-evaluated over the FULL table on every run and the
         whole sink overwritten: a duplicate whose second copy arrives
         after a partition committed still (re)surfaces the committed
         partition's row, because this sink is never partition-filtered
+
+The two sinks are written by two passes that do not depend on each
+other, so a run starts them together as two concurrent Spark job sets
+(see ``run_with_manifest``); the manifest commits only after both.
 
 Manifest storage: append-only JSONL in a driver-local directory, read
 and written with Python file I/O on the driver (a path with a URI
@@ -31,16 +37,56 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import time
+from collections.abc import Callable, Collection, Iterable
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from zparse_spark.schema import MANIFEST_SCHEMA, VIOLATION_SCHEMA, union_violations
 
 # a scheme prefix (``s3a:``, ``hdfs:``, ``file:``) — Hadoop resolves the
 # path on that filesystem, while the manifest's file I/O stays local
 _URI_SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:")
+# Spark's partition directory names: ``partition=<value>`` with special
+# characters written as ``%XX`` and a null value as the default partition
+_PARTITION_DIR = "partition="
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+_ESCAPED_CHAR = re.compile(r"%([0-9A-Fa-f]{2})")
+
+
+def _partition_value(dirname: str) -> str | None:
+    """The partition value a ``partition=…`` directory holds."""
+    v = dirname[len(_PARTITION_DIR):]
+    if v == _NULL_PARTITION:
+        return None
+    return _ESCAPED_CHAR.sub(lambda m: chr(int(m.group(1), 16)), v)
+
+
+def _partition_in(parts: Collection[str | None]) -> Column:
+    """``partition`` is one of ``parts``, where None matches the null
+    partition. Never null, so its negation is the exact complement."""
+    named = sorted(p for p in parts if p is not None)
+    if not named:
+        return F.col("partition").isNull() if None in parts else F.lit(False)
+    return F.coalesce(F.col("partition").isin(named), F.lit(None in parts))
+
+
+def _run_concurrently(spark: SparkSession, *passes: Callable[[], None]) -> None:
+    """Run each pass on its own thread of a pool made for this call, so
+    their Spark jobs overlap (one pass's driver-side planning and commit
+    run while the other's tasks hold the executors). Each thread inherits
+    the caller's job group, description and tags. Waits for every pass,
+    then re-raises the first failed pass's error, in pass order."""
+    with ThreadPoolExecutor(max_workers=len(passes)) as pool:
+        # wrapped once per pass: each wrap copies the local properties, and
+        # Spark SQL sets its execution id in them while a query runs
+        futures = [pool.submit(inheritable_thread_target(spark)(p)) for p in passes]
+    for f in futures:
+        f.result()
 
 
 class Manifest:
@@ -145,6 +191,21 @@ class Manifest:
     def table_sink(self, rules_hash: str) -> str:
         return os.path.join(self.path, "violations_table", f"rules_hash={rules_hash}")
 
+    def clear_partitions(self, rules_hash: str, partitions: Iterable[str | None]) -> None:
+        """Delete the partition sink's directories of ``partitions`` (None
+        is the null partition). Dynamic overwrite replaces only the
+        partitions present in the rows it writes, so a re-validated
+        partition that now has no violations would keep its old rows.
+        Directory names are unescaped and compared with the values, not
+        the values escaped."""
+        sink = self.partition_sink(rules_hash)
+        if not os.path.isdir(sink):
+            return
+        wanted = set(partitions)
+        for name in os.listdir(sink):
+            if name.startswith(_PARTITION_DIR) and _partition_value(name) in wanted:
+                shutil.rmtree(os.path.join(sink, name))
+
     def read_violations(self, spark: SparkSession, rules_hash: str) -> DataFrame:
         """All persisted violations for ``rules_hash``: the per-partition
         sink UNION the table-rule sink. Explicit schema — an all-valid
@@ -166,11 +227,22 @@ def run_with_manifest(
 ) -> list[str]:
     """Resumable run: validate only partitions absent from the manifest
     kept in ``out_dir`` (a driver-local directory, see ``Manifest``).
+    Returns newly committed partitions.
 
-    One Spark job validates ALL pending partitions together (the pending
-    filter is a partition-prunable predicate — on a real Iceberg table it
-    becomes partition pruning at the scan); per-partition violation counts
-    then commit one manifest batch. Returns newly committed partitions.
+    One job counts the pending docs per partition (the pending filter is
+    a partition-prunable predicate — on a real Iceberg table it becomes
+    partition pruning at the scan); nothing pending ends the run there.
+    Then two independent passes run as two concurrent job sets:
+
+    - the pending pass validates ALL pending partitions together with the
+      partition-decomposable rules and replaces their directories in the
+      ``violations`` sink;
+    - the table pass re-evaluates the table-wide rules and overwrites the
+      ``violations_table`` sink.
+
+    After both, per-partition violation counts are read back and commit
+    one manifest batch. If either pass fails, the call waits for the
+    other, re-raises the first error and commits nothing.
 
     Resume semantics for the non-decomposable rules: U1 (table-wide
     doc_id uniqueness) and D1 (per-partition PSI vs the GLOBAL kind
@@ -194,7 +266,7 @@ def run_with_manifest(
     spark = docs.sparkSession
     rh = engine.config.rules_hash()
     done = manifest.committed_partitions(spark, rh)
-    pending_docs = docs.filter(~F.col("partition").isin(sorted(done))) if done else docs
+    pending_docs = docs.filter(~_partition_in(done)) if done else docs
 
     # the one scan of the pending docs: which partitions to validate and
     # how many docs each holds (the n_docs their commit rows record)
@@ -206,32 +278,39 @@ def run_with_manifest(
         return []
     todo = list(n_docs)
 
-    # M1 is partition-decomposable (each referencing span checks against
-    # the global payload table), so it rides with the pending-only pass
-    viol = engine.violations(
-        pending_docs, media_catalog, include_table_rules=False, media_verdicts=media_verdicts
-    )
-    # per-partition dynamic overwrite: re-validating a partition REPLACES
-    # its violation files instead of appending a second copy — a job that
-    # died between the data write and the manifest commit stays idempotent
-    # on rerun (mode('append') would double-count on readback). A writer
-    # option, so no other job on the session sees the mode
-    (
-        viol.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("partition")
-        .parquet(manifest.partition_sink(rh))
-    )
+    def pending_pass() -> None:
+        # M1 is partition-decomposable (each referencing span checks
+        # against the global payload table), so it rides with this pass
+        viol = engine.violations(
+            pending_docs, media_catalog, include_table_rules=False, media_verdicts=media_verdicts
+        )
+        # per-partition dynamic overwrite: re-validating a partition
+        # REPLACES its violation files instead of appending a second copy —
+        # a job that died between the data write and the manifest commit
+        # stays idempotent on rerun (mode('append') would double-count on
+        # readback). A writer option, so the other pass's jobs on the
+        # session never see the mode
+        (
+            viol.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("partition")
+            .parquet(manifest.partition_sink(rh))
+        )
 
-    # table-wide rules: full re-evaluation, full sink overwrite (see
-    # module docstring) — never filtered to pending partitions
-    table_viol = engine.table_violations(docs)
-    table_viol.write.mode("overwrite").parquet(manifest.table_sink(rh))
+    def table_pass() -> None:
+        # table-wide rules: full re-evaluation, full sink overwrite (see
+        # module docstring) — never filtered to pending partitions
+        engine.table_violations(docs).write.mode("overwrite").parquet(manifest.table_sink(rh))
+
+    # a pending partition with no violations now writes no rows, and
+    # dynamic overwrite would leave its old directory in place
+    manifest.clear_partitions(rh, todo)
+    _run_concurrently(spark, pending_pass, table_pass)
 
     n_viol = {
         r["partition"]: r["count"]
         for r in manifest.read_violations(spark, rh)
-        .filter(F.col("partition").isin(todo))
+        .filter(_partition_in(todo))
         .groupBy("partition")
         .count()
         .collect()
