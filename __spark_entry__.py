@@ -5,8 +5,8 @@ uniqueness + referential + drift) over the sf0.001 documents table
 lifted to the interleaved span schema; returns the dense
 (partition × rule) verdict matrix.
 
-``queries`` / ``oracle_sql``: operator registry with DuckDB oracles —
-see ``zparse_spark/queries.py``.
+``queries`` / ``oracle_sql``: the gate's DuckDB twins, each a Spark
+query and its SQL reimplementation — see ``zparse_spark/queries_span.py``.
 """
 
 from __future__ import annotations
@@ -48,12 +48,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from zparse_spark.queries import all_queries
+    from zparse_spark.queries_span import QUERIES
 
-    return all_queries()
+    return dict(QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
-    from zparse_spark.queries import all_oracles
+    from zparse_spark.queries_span import ORACLES
 
-    return all_oracles()
+    return dict(ORACLES)

@@ -236,10 +236,8 @@ def main() -> None:
     }
     print(json.dumps(result))
     # persist as a NEW per-run artifact (never overwrite a shared file):
-    # bench.py aggregates every multi_jvm_result*.json and quotes the
-    # per-k MEDIAN, so no single run — and no selected file — can become
-    # the headline (round-4 verdict: the old single-artifact quote let a
-    # best-of-12 outlier stand in for a 0.44-median distribution)
+    # quote the per-k MEDIAN over every multi_jvm_result*.json, so no
+    # single run — and no selected file — becomes the headline
     stamp = result["measured_at"].replace(":", "").replace("-", "")
     artifact = os.path.join(
         os.path.dirname(os.path.abspath(__file__)),

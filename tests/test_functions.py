@@ -703,45 +703,6 @@ def test_mixed_script_audit_flags_homoglyph_tokens(spark):
     assert out["p2"]["n_mixed"] == 1 and out["p2"]["example_doc_id"] == "d4"
 
 
-def test_json_schema_violations_matrix(spark):
-    """X143: J0 malformed, J1 missing + JSON-null, J2 per coarse class
-    (string/number/bool/object/array all mismatch 'int'); clean rows and
-    NULL cells emit nothing; multi-path schemas fire independently."""
-    from zparse_spark.functions.json_profile import json_schema_violations
-
-    rows = [
-        (1, '{"k": 7, "s": "ok"}'),          # clean
-        (2, '{"k": "str", "s": "ok"}'),      # J2 string
-        (3, '{"s": "ok"}'),                   # J1 missing k
-        (4, "garbage"),                       # J0
-        (5, '{"k": null, "s": "ok"}'),       # J1 (json null)
-        (6, '{"k": 1.5, "s": "ok"}'),        # J2 number
-        (7, '{"k": true, "s": "ok"}'),       # J2 bool
-        (8, '{"k": {"a":1}, "s": "ok"}'),    # J2 object
-        (9, '{"k": [1], "s": "ok"}'),        # J2 array
-        (10, None),                           # out of scope
-        (11, '{"k": 3}'),                     # J1 missing s
-    ]
-    df = spark.createDataFrame(rows, "event_id int, props string")
-    out = json_schema_violations(
-        df, "props", {"$.k": "int", "$.s": "string"}, id_cols=["event_id"]
-    ).collect()
-    got = sorted((r["event_id"], r["rule_id"], r["path"], r["message"]) for r in out)
-    assert got == sorted(
-        [
-            (2, "J2", "$.k", "expected int, got string"),
-            (3, "J1", "$.k", "required path missing"),
-            (4, "J0", None, "malformed json"),
-            (5, "J1", "$.k", "required path missing"),
-            (6, "J2", "$.k", "expected int, got number"),
-            (7, "J2", "$.k", "expected int, got bool"),
-            (8, "J2", "$.k", "expected int, got object"),
-            (9, "J2", "$.k", "expected int, got array"),
-            (11, "J1", "$.s", "required path missing"),
-        ]
-    )
-
-
 def test_code_switching_audit_hand_case(spark):
     """X147: a doc with 2 en lines + 1 de line (33% minority) is mixed;
     a doc with 7 en + 1 de (12.5% < 25%) is not; all-und docs are out

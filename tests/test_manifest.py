@@ -296,6 +296,29 @@ def test_media_decode_without_verdicts_is_refused(spark, tmp_path):
     assert sc.statusTracker().getJobIdsForGroup("media_decode_no_verdicts") == []
     assert not os.path.exists(out)
 
+
+def test_empty_string_partition_is_refused(spark, tmp_path):
+    """Spark writes a "" partition value as the null partition, so the
+    readback never matched it and its commit recorded 0 violations for
+    d1's S1 breach. Refused after the pending count, before any write:
+    no manifest and no sink."""
+    import pytest
+
+    from tests.conftest import make_docs
+
+    out = str(tmp_path / "run12")
+    docs = make_docs(
+        spark,
+        [
+            ("d1", [("text", "a", None, 5), ("text", "b", None, 2)], ""),
+            ("d2", [("text", "ok", None, 0)], "p1"),
+        ],
+    )
+    eng = ValidationEngine(ValidationConfig(enable_referential=False, enable_drift=False))
+    with pytest.raises(ValueError, match="partition ''"):
+        run_with_manifest(eng, docs, None, out)
+    assert not os.path.exists(out)
+
 # Spark jobs of one resume below (one committed partition, one appended):
 # 14 with D1 reading spans.kind once, so one job of headroom; 15 when D1
 # built its per-partition histogram twice, and 17 when a distinct() found

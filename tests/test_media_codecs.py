@@ -1,5 +1,5 @@
-"""Pure-python codec tests (no Spark): BMP/WAV roundtrips, resize
-semantics, classification — including hypothesis property coverage."""
+"""Pure-python codec tests (no Spark): BMP/WAV/ZVID roundtrips and
+classification — including hypothesis property coverage."""
 
 from __future__ import annotations
 
@@ -13,14 +13,28 @@ from zparse_spark.functions.media_codecs import (
     bmp_encode,
     bmp_row_size,
     classify_payload,
-    default_decoder,
-    default_resizer,
-    nearest_resize,
     synth_audio,
     synth_image,
     wav_decode,
     wav_encode,
+    zvid_frame,
+    zvid_info,
 )
+
+
+def _decode(payload: bytes) -> None:
+    """Fully decode a payload by its magic bytes; raises on anything
+    the decoders reject."""
+    if payload[:4] == b"ZVID":
+        n_frames, _frame_ms, _frame_size = zvid_info(payload)
+        for i in range(n_frames):
+            zvid_frame(payload, i)
+    elif payload[:2] == b"BM":
+        bmp_decode(payload)
+    elif payload[:4] == b"RIFF":
+        wav_decode(payload)
+    else:
+        raise NotImplementedError("no BMP/WAV/ZVID magic")
 
 
 @settings(max_examples=40, deadline=None)
@@ -51,31 +65,6 @@ def test_wav_roundtrip_property(n, sr, seed):
     out, sr2 = wav_decode(data)
     assert sr2 == sr and np.array_equal(out, samples)
     assert classify_payload(data) is None
-
-
-def test_nearest_resize_known_case():
-    # 4x4 checker downsampled 2x with floor mapping picks rows/cols 0, 2
-    img = np.arange(4 * 4 * 3, dtype=np.uint8).reshape(4, 4, 3)
-    out = nearest_resize(img, 2, 2)
-    assert np.array_equal(out, img[[0, 2]][:, [0, 2]])
-
-
-def test_resizer_is_decode_subsample_encode():
-    img = synth_image(7)
-    out = default_resizer(bmp_encode(img), "image", 5, 3)
-    assert np.array_equal(bmp_decode(out), nearest_resize(img, 5, 3))
-
-
-def test_features_match_numpy():
-    img = synth_image(4)
-    f = default_decoder(bmp_encode(img), "image")
-    fl = img.astype(np.float64)
-    assert f[:3] == [img.shape[1], img.shape[0], 3.0]
-    assert f[3] == fl.mean() and f[4] == fl.std()
-    s, sr = synth_audio(5)
-    f = default_decoder(wav_encode(s, sr), "audio")
-    assert f[0] == sr and f[1] == len(s)
-    assert f[3] == s.astype(np.float64).mean()
 
 
 def test_classifier_matches_decoder_errors():
@@ -119,7 +108,7 @@ def test_classifier_matches_decoder_errors():
     for payload in cases:
         verdict = classify_payload(payload)
         try:
-            default_decoder(payload, "any")
+            _decode(payload)
             decoded = True
         except (ValueError, NotImplementedError):
             decoded = False
@@ -140,12 +129,7 @@ def test_strictness_rejects_variants():
 
 
 def test_zvid_roundtrip_and_slicing():
-    from zparse_spark.functions.media_codecs import (
-        synth_video,
-        zvid_encode,
-        zvid_frame,
-        zvid_info,
-    )
+    from zparse_spark.functions.media_codecs import synth_video, zvid_encode
 
     frames, frame_ms = synth_video(5)
     data = zvid_encode(frames, frame_ms)
@@ -160,46 +144,3 @@ def test_zvid_roundtrip_and_slicing():
     assert classify_payload(bad_nf) == "unsupported_variant"
     with pytest.raises(IndexError):
         zvid_frame(data, len(frames))
-
-
-@settings(max_examples=25, deadline=None)
-@given(
-    w=st.integers(min_value=1, max_value=21),
-    h=st.integers(min_value=1, max_value=21),
-    max_side=st.sampled_from([4, 8, 10, 16]),
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-)
-def test_resize_matches_hex_arithmetic_model(w, h, max_side, seed):
-    """The DuckDB oracle reconstructs resized BMP bytes from the source
-    payload with header/offset arithmetic only; this python port of that
-    exact formula must equal the real resizer byte-for-byte for ANY dims
-    — the invariant the media_payload_report oracle rests on."""
-    import struct
-
-    from zparse_spark.functions.media_codecs import bmp_row_size, default_resizer
-
-    rng = np.random.default_rng(seed)
-    img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-    payload = bmp_encode(img)
-
-    mx = max(w, h)
-    tw, th = (
-        (max(w * max_side // mx, 1), max(h * max_side // mx, 1)) if mx > max_side else (w, h)
-    )
-    real = default_resizer(payload, "image", tw, th)
-
-    # the SQL twin, ported literally (same integer formulas)
-    rowsize, rowsize_t = bmp_row_size(w), bmp_row_size(tw)
-    out = bytearray()
-    out += b"BM" + struct.pack("<I", 54 + rowsize_t * th)
-    out += b"\x00\x00\x00\x00" + struct.pack("<I", 54)
-    out += struct.pack("<IiiHHIIiiII", 40, tw, th, 1, 24, 0, rowsize_t * th, 0, 0, 0, 0)
-    for j in range(th):
-        src_fr = h - 1 - ((th - 1 - j) * h) // th
-        row = bytearray()
-        for x in range(tw):
-            off = 54 + src_fr * rowsize + 3 * ((x * w) // tw)
-            row += payload[off : off + 3]
-        row += b"\x00" * (rowsize_t - 3 * tw)
-        out += row
-    assert real == bytes(out)

@@ -1,165 +1,21 @@
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from zparse_spark.multimodal import (
-    deterministic_fake_decoder,
-    extract_features,
-    frame_sample_plan,
-    set_decoder,
-    synthesize_payloads,
-)
-from zparse_spark.sources.interleave import derive_media_catalog
 
-
-@pytest.fixture()
-def payloads(spark):
-    cat = derive_media_catalog(spark, n_media_refs=64)
-    return synthesize_payloads(spark, cat)
-
-
-def test_payload_synthesis_deterministic(spark, payloads):
-    a = {r["media_ref"]: bytes(r["payload"]) for r in payloads.collect()}
-    b = {r["media_ref"]: bytes(r["payload"]) for r in payloads.collect()}
-    assert a == b and len(a) == 64
-    assert all(len(v) == 64 for v in a.values())  # 128 hex chars → 64 bytes
-
-
-def test_extract_features_with_fake_decoder(spark, payloads):
-    set_decoder(deterministic_fake_decoder)
-    try:
-        feats = extract_features(payloads)
-        rows = feats.collect()
-        assert len(rows) == 64
-        for r in rows:
-            assert r["n_bytes"] == 64
-            assert len(r["feature"]) == 8
-            assert r["feature"][0] == 64.0  # n
-        # arrow path, not row-at-a-time python
-        plan = feats._jdf.queryExecution().executedPlan().toString()
-        assert "MapInPandas" in plan and "BatchEvalPython" not in plan
-    finally:
-        set_decoder(None)
-
-
-def test_extract_features_unknown_format_raises(spark, payloads):
-    # the default decoder is the real BMP/WAV codec; payloads without a
-    # known magic (these are sha-derived fakes) fail with a typed error
-    set_decoder(None)
-    feats = extract_features(payloads.limit(1))
-    with pytest.raises(Exception, match="unsupported media payload format"):
-        feats.collect()
-
-
-def test_frame_sample_plan_jvm_side(spark, payloads):
-    frames = frame_sample_plan(payloads, every_ms=200)
-    rows = frames.collect()
-    # duration 1000ms / 200ms = 5 frames per video payload
-    by_ref = {}
-    for r in rows:
-        by_ref.setdefault(r["media_ref"], []).append(r["ts_ms"])
-    for ref, ts in by_ref.items():
-        assert sorted(ts) == [0, 200, 400, 600, 800]
-    plan = frames._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan  # bookkeeping stays JVM-side
-
-
-def test_resize_images_plans_dims_jvm_side(spark):
-    from zparse_spark.multimodal import (
-        deterministic_fake_resizer,
-        resize_images,
-        set_resizer,
-        synthesize_payloads,
-    )
-    from pyspark.sql import functions as F
-
-    cat = spark.createDataFrame(
-        [("m1", "image"), ("m2", "image"), ("m3", "audio")],
-        ["media_ref", "media_kind"],
-    )
-    payloads = synthesize_payloads(spark, cat)
-    # give m2 an oversized frame so only it shrinks
-    payloads = payloads.withColumn(
-        "meta",
-        F.when(
-            F.col("media_ref") == "m2",
-            F.struct(
-                F.lit(1024).alias("width"), F.lit(512).alias("height"),
-                F.col("meta.sample_rate").alias("sample_rate"),
-                F.col("meta.duration_ms").alias("duration_ms"),
-                F.col("meta.codec").alias("codec"),
-            ),
-        ).otherwise(F.col("meta")),
-    )
-
-    set_resizer(deterministic_fake_resizer)
-    try:
-        out = {r["media_ref"]: r for r in resize_images(payloads, max_side=256).collect()}
-    finally:
-        set_resizer(None)
-
-    assert set(out) == {"m1", "m2"}  # audio rows never reach Python
-    # m1 is 64x64, under the cap: dims unchanged
-    assert (out["m1"]["meta"]["width"], out["m1"]["meta"]["height"]) == (64, 64)
-    assert len(out["m1"]["payload"]) == 64 * 64
-    # m2 1024x512 -> scale 0.25 -> 256x128, aspect preserved
-    assert (out["m2"]["meta"]["width"], out["m2"]["meta"]["height"]) == (256, 128)
-    assert len(out["m2"]["payload"]) == 256 * 128
-
-
-def test_resize_unknown_format_raises(spark):
-    import pytest
-
-    from zparse_spark.multimodal import resize_images, synthesize_payloads
-
-    cat = spark.createDataFrame([("m1", "image")], ["media_ref", "media_kind"])
-    with pytest.raises(Exception, match="unsupported image format"):
-        resize_images(synthesize_payloads(spark, cat)).collect()
-
-
-def test_default_codec_path_end_to_end(spark):
-    """The judge's first-class bar: extract_features and resize_images
-    work with NO injected codec — real BMP/WAV decode on real payloads."""
-    import numpy as np
-
+def test_payload_synthesis_deterministic(spark):
+    """Codec payloads are a pure function of the id: two runs agree, and
+    each payload equals the local encoder's bytes for its kind."""
     from zparse_spark.functions import media_codecs
-    from zparse_spark.multimodal import (
-        extract_features,
-        resize_images,
-        synthesize_codec_payloads,
-    )
+    from zparse_spark.multimodal import synthesize_codec_payloads
 
-    pay = synthesize_codec_payloads(spark, n_media=18)
-    feats = {r["media_ref"]: r for r in extract_features(pay).collect()}
-    assert len(feats) == 18
-    for idx in range(18):
-        ref = f"media_{idx:05d}"
-        f = feats[ref]["feature"]
-        if idx % 3 == 0:
-            img = media_codecs.synth_image(idx)
-            assert (f[0], f[1]) == (img.shape[1], img.shape[0])
-            assert f[3] == img.astype(np.float64).mean()
-        elif idx % 3 == 1:
-            s, sr = media_codecs.synth_audio(idx)
-            assert (f[0], f[1]) == (sr, len(s))
-            assert f[3] == s.astype(np.float64).mean()
-        else:
-            frames, frame_ms = media_codecs.synth_video(idx)
-            assert (f[0], f[1]) == (frames[0].shape[1], frames[0].shape[0])
-            assert f[2] == len(frames) and f[4] == frame_ms
-            assert f[3] == np.stack(frames).astype(np.float64).mean()
-
-    out = {r["media_ref"]: r for r in resize_images(pay, max_side=8).collect()}
-    for idx in range(0, 18, 3):
-        ref = f"media_{idx:05d}"
-        src = media_codecs.synth_image(idx)
-        h, w = src.shape[:2]
-        mx = max(w, h)
-        tw, th = (max(w * 8 // mx, 1), max(h * 8 // mx, 1)) if mx > 8 else (w, h)
-        expected = media_codecs.bmp_encode(media_codecs.nearest_resize(src, tw, th))
-        assert bytes(out[ref]["payload"]) == expected
-        assert (out[ref]["meta"]["width"], out[ref]["meta"]["height"]) == (tw, th)
+    pay = synthesize_codec_payloads(spark, n_media=6)
+    a = {r["media_ref"]: bytes(r["payload"]) for r in pay.collect()}
+    b = {r["media_ref"]: bytes(r["payload"]) for r in pay.collect()}
+    assert a == b and len(a) == 6
+    assert a["media_00000"] == media_codecs.bmp_encode(media_codecs.synth_image(0))
+    assert a["media_00001"] == media_codecs.wav_encode(*media_codecs.synth_audio(1))
+    assert a["media_00002"] == media_codecs.zvid_encode(*media_codecs.synth_video(2))
 
 
 def test_decode_verdicts_classification(spark):
@@ -178,37 +34,3 @@ def test_decode_verdicts_classification(spark):
     )
     crows = decode_verdicts(corrupted).collect()
     assert all((not r["ok"]) and r["error_kind"] == "truncated" for r in crows)
-
-
-def test_sample_video_frames_real_decode(spark):
-    """Frame sampling over ZVID: the ts grid is JVM-planned, every
-    sampled frame's sha matches a direct local slice, clamped at the
-    last frame."""
-    import hashlib
-
-    from zparse_spark.functions import media_codecs
-    from zparse_spark.multimodal import sample_video_frames, synthesize_codec_payloads
-
-    pay = synthesize_codec_payloads(spark, n_media=9)
-    rows = sample_video_frames(pay, every_ms=150).collect()
-    assert rows
-    by_ref = {}
-    for r in rows:
-        by_ref.setdefault(r["media_ref"], []).append(r)
-    for idx in range(2, 9, 3):  # video ids
-        ref = f"media_{idx:05d}"
-        frames, frame_ms = media_codecs.synth_video(idx)
-        payload = media_codecs.zvid_encode(frames, frame_ms)
-        dur = len(frames) * frame_ms
-        expect_n = max(dur // 150, 1)
-        got = sorted(by_ref[ref], key=lambda r: r["ts_ms"])
-        assert len(got) == expect_n
-        for r in got:
-            fi = min(r["ts_ms"] // frame_ms, len(frames) - 1)
-            assert r["frame_idx"] == fi
-            blob = media_codecs.bmp_encode(frames[fi])
-            want = hashlib.sha256(blob.hex().upper().encode()).hexdigest()
-            assert r["frame_sha"] == want
-    # Python only for the sampled rows; planning stays JVM-side
-    plan = sample_video_frames(pay, every_ms=150)._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan and "BatchEvalPython" not in plan

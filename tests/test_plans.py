@@ -107,22 +107,6 @@ def test_ivf_topk_plan_discipline(spark, sf_dir):
     assert "BatchEvalPython" not in arrow_plan
 
 
-def test_decorrelation_plans(spark, sf_dir):
-    """The correlated EXISTS / NOT EXISTS flagships must decorrelate to
-    semi/anti joins — never a CartesianProduct, and the anti join keeps
-    the outer-column comparison as a join condition."""
-    from zparse_spark.queries import all_queries
-
-    qs = all_queries()
-    p4 = plan_of(qs["tpch_q4_exists"](spark, sf_dir))
-    assert "CartesianProduct" not in p4
-    assert "LeftSemi" in p4
-
-    p21 = plan_of(qs["tpch_q21_lite"](spark, sf_dir))
-    assert "CartesianProduct" not in p21
-    assert "LeftSemi" in p21 and "LeftAnti" in p21
-
-
 def test_ivf_index_partition_pruning(spark, sf_dir, tmp_path):
     """The materialized IVF index must be probed via partition pruning:
     the scan's PartitionFilters carry the cell IN (...) predicate and
@@ -585,43 +569,3 @@ def test_chi2_contingency_exchange_reused(spark):
     out.collect()
     final = out._jdf.queryExecution().executedPlan().toString()
     assert "ReusedExchange" in final or final.count("LocalTableScan") <= 4
-
-
-def test_global_rank_queries_never_single_partition_corpus(spark):
-    """r6 (r5 verdict item 2): the three queries that rank a corpus-
-    sized domain must never push it through Exchange SinglePartition.
-    corpus_zipf_anchors / stats_hill_tail_index bound the frame with
-    orderBy().limit(k) (TakeOrderedAndProject) BEFORE ranking;
-    stats_score_agreement ranks via value-bucketed windows, so the only
-    single-partition exchanges left are over bounded aggregate frames
-    (per-value counts, the 1-row moment agg) — never a frame carrying
-    doc_id."""
-    import io
-    import contextlib
-    import re
-
-    from zparse_spark.queries import all_queries
-
-    qs = all_queries()
-    sf_dir = "/root/testdata/sf0.001"
-
-    def formatted(df):
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        return buf.getvalue()
-
-    for name in ("corpus_zipf_anchors", "stats_hill_tail_index"):
-        plan = formatted(qs[name](spark, sf_dir))
-        assert "TakeOrderedAndProject" in plan, name
-        assert "Exchange SinglePartition" not in plan.replace(
-            "Arguments: SinglePartition", "Exchange SinglePartition"
-        ) or "SinglePartition" not in plan, name
-
-    plan = formatted(qs["stats_score_agreement"](spark, sf_dir))
-    # every SinglePartition exchange must feed from a bounded frame:
-    # its Input list never carries doc_id (the corpus grain)
-    blocks = re.split(r"\n\n", plan)
-    for b in blocks:
-        if "SinglePartition" in b and "Input" in b:
-            assert "doc_id" not in b, b

@@ -1750,53 +1750,6 @@ def test_magnitude_profile_flags_units_mixup(spark):
     assert t["top_decade"] == -1 and t["split_flag"] is False
 
 
-def test_source_influence_algebra(spark):
-    """Hand case for the jackknife recombination: corpus of two
-    sources, A = {10, 20}, B = {60}. mean_all = 30; without A = 60,
-    without B = 15 -> influence(A) = -30, influence(B) = +15. A corpus
-    with ONE source emits nothing (leave-one-out undefined)."""
-    import zparse_spark.queries as q
-
-    df = spark.createDataFrame(
-        [("A", 10), ("A", 20), ("B", 60)], "source string, n_chars long"
-    )
-
-    class _FakeReader:
-        def parquet(self, path):
-            return df
-
-    class _FakeSpark:
-        read = _FakeReader()
-
-    out = {r["source"]: r for r in q.audit_source_influence(_FakeSpark(), "x").collect()}
-    assert out["A"]["influence"] == -30.0 and out["A"]["mean_excl"] == 60.0
-    assert out["B"]["influence"] == 15.0 and out["B"]["mean_excl"] == 15.0
-
-
-def test_embedding_dim_profile_detects_collapse(spark):
-    """Collapse detector: dim 0 varies (+-1), dims 1-2 constant ->
-    dim 0 must hold ~100% of the trace; constant dims have variance 0.
-    Exact micro-unit quantization makes the shares exact."""
-    import zparse_spark.queries as q
-
-    df = spark.createDataFrame(
-        [([float(1 if i % 2 else -1), 0.5, -0.25],) for i in range(40)],
-        "embedding array<double>",
-    )
-
-    class _FakeReader:
-        def parquet(self, path):
-            return df
-
-    class _FakeSpark:
-        read = _FakeReader()
-
-    out = {r["dim"]: r for r in q.embedding_dim_profile(_FakeSpark(), "x").collect()}
-    assert out[0]["share_of_trace"] == 1.0 and out[0]["variance"] == 1.0
-    assert out[1]["variance"] == 0.0 and out[1]["mean"] == 0.5
-    assert out[2]["share_of_trace"] == 0.0
-
-
 def test_mwu_drift_hand_cases(spark):
     """Exact hand cases on a 4-bin grid: complete separation gives
     r = ±1 with U at its extremes; a fully-tied table has zero
@@ -1819,35 +1772,6 @@ def test_mwu_drift_hand_cases(spark):
     t = {r["g"]: r for r in mwu_drift_scores(tied, "v", "g", 0.0, 4.0, 4).collect()}
     assert int(t["A"]["two_u"]) == 4  # U = nA*nB/2: pure midrank ties
     assert t["A"]["r_rank_biserial"] == 0.0 and t["A"]["z"] is None
-
-
-def test_psi_null_band_deterministic_and_shrinks_with_n(spark):
-    """The null band is a pure function of the keys (re-run identical)
-    and tightens as the corpus grows (10x docs -> smaller max |PSI|):
-    the property that makes folklore thresholds wrong at both ends."""
-    import zparse_spark.queries as q
-
-    def fake(df):
-        class _R:
-            def parquet(self, path):
-                return df
-
-        class _S:
-            read = _R()
-
-        return _S()
-
-    rows = [(i, ["en", "de", "es", "fr"][i % 4]) for i in range(400)]
-    small = spark.createDataFrame(rows, "doc_id long, lang string")
-    big = spark.createDataFrame(
-        [(i * 10 + k, l) for (i, l) in rows for k in range(10)],
-        "doc_id long, lang string",
-    )
-    s1 = {r["seed"]: r["psi"] for r in q.drift_psi_null_band(fake(small), "x").collect()}
-    s2 = {r["seed"]: r["psi"] for r in q.drift_psi_null_band(fake(small), "x").collect()}
-    assert s1 == s2  # deterministic in the keys
-    b = {r["seed"]: r["psi"] for r in q.drift_psi_null_band(fake(big), "x").collect()}
-    assert max(b.values()) < max(s1.values())  # noise shrinks with n
 
 
 def test_median_ci_hand_case(spark):

@@ -193,17 +193,10 @@ def main(argv: list[str] | None = None) -> int:
         spark.stop()
         return 0 if n_conf == 0 else 1
 
-    if args.no_resume:
-        import contextlib
-        import os
-        import shutil
-
-        # only what run_with_manifest resumes from: --out may hold anything
-        for sink in ("violations", "violations_table"):
-            shutil.rmtree(os.path.join(args.out, sink), ignore_errors=True)
-        with contextlib.suppress(FileNotFoundError):
-            os.remove(os.path.join(args.out, "manifest.jsonl"))
     manifest = Manifest(args.out)
+    if args.no_resume:
+        # only what run_with_manifest resumes from: --out may hold anything
+        manifest.reset()
     done = run_with_manifest(engine, docs, catalog, args.out, media_verdicts=media_verdicts)
 
     viol = manifest.read_violations(spark, engine.config.rules_hash())

@@ -1,23 +1,22 @@
-"""Dependency-free media codecs: BMP (24-bit) and WAV (16-bit PCM).
+"""Dependency-free media codecs: BMP (24-bit), WAV (16-bit PCM) and ZVID.
 
-These are the engine's default codec path for the multimodal operators
-(zparse_spark.multimodal) — real byte-level decode/encode implemented
-with struct + numpy only, because the container ships no image/audio
-libraries. They mirror the reference's binary-input contract
-(/root/reference/crates/zparse/src/input.rs:5-8: opaque bytes in, typed
-values out) for the two formats whose containers are pure structure:
+Real byte-level encode/decode with struct + numpy only, because the
+container ships no image/audio libraries. The gate's M1 rule reads
+``classify_payload``'s verdict for each payload (through
+``zparse_spark.multimodal.decode_verdicts``): opaque bytes in, either a
+clean payload or a typed error kind out.
 
 - BMP: BITMAPINFOHEADER, 24 bpp, uncompressed (BI_RGB), bottom-up rows
   padded to 4-byte boundaries, BGR channel order — decoded to an RGB
   ``uint8 (h, w, 3)`` array.
 - WAV: canonical 44-byte RIFF/WAVE header, PCM (format 1), 16-bit
   mono — decoded to an ``int16`` sample array + sample rate.
+- ZVID: a fixed-rate container of equal-size BMP frames (O(1) frame
+  slicing).
 
-Every byte the encoders emit is a deterministic function of the input
-array, so the resize pipeline (decode → nearest-neighbor subsample →
-re-encode) is reproducible cross-engine: the DuckDB oracle twin in
-``queries_media`` re-derives the exact output bytes from the original
-payload blob with hex arithmetic and checks sha256 equality.
+Every byte the encoders emit is a deterministic function of the input,
+so the ``synth_*`` payloads are identical on every run and the DuckDB
+twin in ``queries_span`` classifies the same bytes.
 """
 
 from __future__ import annotations
@@ -80,16 +79,6 @@ def bmp_decode(data: bytes) -> np.ndarray:
     rows = np.frombuffer(data[offset:end], dtype=np.uint8).reshape(h, rowsize)
     # strip padding, bottom-up → top-down, BGR → RGB
     return rows[:, : 3 * w].reshape(h, w, 3)[::-1, :, ::-1].copy()
-
-
-def nearest_resize(img: np.ndarray, tw: int, th: int) -> np.ndarray:
-    """Nearest-neighbor resample with floor index mapping
-    ``src = (dst * src_size) // dst_size`` — pure integer arithmetic, so
-    the mapping is bit-reproducible in SQL (the DuckDB twin uses ``//``)."""
-    h, w = img.shape[:2]
-    rows = (np.arange(th, dtype=np.int64) * h) // th
-    cols = (np.arange(tw, dtype=np.int64) * w) // tw
-    return img[rows][:, cols]
 
 
 # ---------------------------------------------------------------------------
@@ -196,95 +185,12 @@ def zvid_frame(data: bytes, i: int) -> np.ndarray:
     return bmp_decode(data[off : off + frame_size])
 
 
-# ---------------------------------------------------------------------------
-# default codec hooks for zparse_spark.multimodal
-# ---------------------------------------------------------------------------
-
-
-def default_decoder(payload: bytes, kind: str) -> list[float]:
-    """8-feature decode for BMP and WAV payloads (dispatch on magic
-    bytes, not the declared kind — a mislabeled payload still decodes,
-    and the M-rule check compares against the metadata separately).
-
-    image → [w, h, channels, pixel_mean, pixel_std, min, max, n_values]
-    audio → [sample_rate, n_samples, duration_ms, mean, rms, min, max,
-             zero_crossings]
-    video → [w, h, n_frames, pixel_mean(all frames), frame_ms,
-             duration_ms, frame_size, n_bytes]
-
-    pixel_mean / sample mean are exact: integer values summed in float64
-    stay exact below 2^53, so the DuckDB oracle's AVG over the same bytes
-    reproduces them bit-for-bit.
-    """
-    if payload[:4] == b"ZVID":
-        n_frames, frame_ms, frame_size = zvid_info(payload)
-        frames = np.stack([zvid_frame(payload, i) for i in range(n_frames)])
-        h, w = frames.shape[1:3]
-        return [
-            float(w),
-            float(h),
-            float(n_frames),
-            float(frames.astype(np.float64).mean()),
-            float(frame_ms),
-            float(n_frames * frame_ms),
-            float(frame_size),
-            float(len(payload)),
-        ]
-    if payload[:2] == b"BM":
-        img = bmp_decode(payload)
-        h, w = img.shape[:2]
-        f = img.astype(np.float64)
-        return [
-            float(w),
-            float(h),
-            3.0,
-            float(f.mean()),
-            float(f.std()),
-            float(img.min()),
-            float(img.max()),
-            float(h * w * 3),
-        ]
-    if payload[:4] == b"RIFF":
-        samples, sr = wav_decode(payload)
-        n = len(samples)
-        if n == 0:
-            return [float(sr), 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0]
-        f = samples.astype(np.float64)
-        zc = int(np.count_nonzero((f[1:] < 0) != (f[:-1] < 0)))
-        return [
-            float(sr),
-            float(n),
-            1000.0 * n / sr,
-            float(f.mean()),
-            float(np.sqrt((f * f).mean())),
-            float(samples.min()),
-            float(samples.max()),
-            float(zc),
-        ]
-    raise NotImplementedError(
-        "unsupported media payload format (no BMP/WAV magic); "
-        "install a codec for this format via set_decoder(...)"
-    )
-
-
-def default_resizer(payload: bytes, kind: str, tw: int, th: int) -> bytes:
-    """Real pixel resize for BMP payloads: decode → nearest-neighbor →
-    re-encode. The output is a canonical BMP whose bytes are a pure
-    function of the input bytes and (tw, th)."""
-    if payload[:2] == b"BM":
-        return bmp_encode(nearest_resize(bmp_decode(payload), tw, th))
-    raise NotImplementedError(
-        "unsupported image format for resize (no BMP magic); "
-        "install a resizer for this format via set_resizer(...)"
-    )
-
-
 def classify_payload(payload: bytes) -> str | None:
     """Deterministic decode verdict: ``None`` when the payload decodes,
     else one of ``bad_magic`` / ``truncated`` / ``unsupported_variant``.
 
     The check ORDER is part of the contract — the DuckDB oracle twin
-    (queries_media) evaluates the same conditions in the same order as a
+    (queries_span) evaluates the same conditions in the same order as a
     SQL CASE over the payload's hex, so a payload failing several checks
     must classify identically in both engines. This is the table-scale
     analog of the reference's closed error-kind enum (error.rs:48-64):
@@ -305,7 +211,7 @@ def classify_payload(payload: bytes) -> str | None:
         if _ZVID_HEADER_SIZE + n_frames * frame_size > len(payload):
             return "truncated"
         # every interior frame must be a decodable 24-bit BMP fitting its
-        # slot — 'ok' GUARANTEES zvid_frame()/default_decoder succeed on
+        # slot — 'ok' GUARANTEES zvid_frame()/bmp_decode succeed on
         # every frame, not just that the container header parses (the M1
         # contract: corrupt media is violation DATA, never a task failure).
         # Cost is O(n_frames) fixed-offset header reads, no pixel I/O.

@@ -1,15 +1,11 @@
 """Multimodal columns: opaque binary payloads + typed metadata.
 
-Media payloads ride as ``binary`` columns with a typed metadata struct;
-decode / feature-extract / resize / frame-sample run as Arrow-batched
-``mapInPandas`` stages. The default codec path is REAL: dependency-free
-BMP, WAV, and ZVID (fixed-rate video container, O(1) frame slicing)
-codecs (functions.media_codecs) decode pixels/samples/frames, extract
-features, and produce actual resized output — no injected fake needed.
-Formats beyond these (JPEG, MP3, MP4…) need a codec library this
-container lacks; for those, plug a decoder/resizer in via
-``set_decoder``/``set_resizer`` (the default raises NotImplementedError
-on unknown magic bytes rather than guessing).
+Media payloads ride as ``binary`` columns with a typed metadata struct.
+The gate's M1 rule ("every referenced payload decodes") reads one
+verdict per payload from ``decode_verdicts``, an Arrow-batched
+``mapInPandas`` stage over the dependency-free BMP, WAV and ZVID header
+checks in ``functions.media_codecs``. ``synthesize_codec_payloads``
+builds deterministic real payloads for tests and benchmarks.
 
 Schema:
   media_payloads(media_ref string, media_kind string, payload binary,
@@ -19,7 +15,7 @@ Schema:
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -48,66 +44,6 @@ MEDIA_PAYLOAD_SCHEMA = T.StructType(
         ),
     ]
 )
-
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType(), False),
-        T.StructField("media_kind", T.StringType(), True),
-        T.StructField("n_bytes", T.LongType(), True),
-        # double, not float: feature[3] (content mean) feeds the DuckDB
-        # oracle, whose AVG is float64 — float32 would break round() parity
-        T.StructField("feature", T.ArrayType(T.DoubleType()), True),
-    ]
-)
-
-# Pluggable codec; the default is the real BMP/WAV decoder.
-# set_decoder(None) resets to the default.
-_DECODER: Callable[[bytes, str], list[float]] = media_codecs.default_decoder
-
-
-def set_decoder(fn: Callable[[bytes, str], list[float]] | None) -> None:
-    global _DECODER
-    _DECODER = fn if fn is not None else media_codecs.default_decoder
-
-
-def deterministic_fake_decoder(payload: bytes, kind: str) -> list[float]:
-    """Seed-free deterministic stand-in: 8 features derived from byte
-    statistics. Replaces PIL/librosa/ffmpeg in this container."""
-    if not payload:
-        return [0.0] * 8
-    n = len(payload)
-    s = sum(payload)
-    return [
-        float(n),
-        s / n,
-        float(payload[0]),
-        float(payload[-1]),
-        float(max(payload)),
-        float(min(payload)),
-        float(s % 251),
-        float((payload[0] ^ payload[-1]) if n else 0),
-    ]
-
-
-def synthesize_payloads(spark: SparkSession, media_catalog: DataFrame) -> DataFrame:
-    """Deterministic binary payloads for the catalog (test/bench input:
-    no real media in the sandbox). Payload bytes derive from xxhash64 of
-    the ref — stable across runs and partitioning."""
-    return media_catalog.select(
-        "media_ref",
-        "media_kind",
-        F.to_binary(
-            F.substring(F.repeat(F.sha2(F.col("media_ref"), 256), 4), 1, 128), F.lit("hex")
-        ).alias("payload"),
-        F.struct(
-            F.lit(64).alias("width"),
-            F.lit(64).alias("height"),
-            F.lit(16000).alias("sample_rate"),
-            F.lit(1000).alias("duration_ms"),
-            F.lit("fake").alias("codec"),
-        ).alias("meta"),
-    )
-
 
 def synthesize_codec_payloads(spark: SparkSession, n_media: int = 96) -> DataFrame:
     """Deterministic REAL media payloads: ids rotate image (BMP), audio
@@ -154,40 +90,6 @@ def synthesize_codec_payloads(spark: SparkSession, n_media: int = 96) -> DataFra
     return base.mapInPandas(gen, MEDIA_PAYLOAD_SCHEMA)
 
 
-def extract_features(payloads: DataFrame, batch_hint: int = 10_000) -> DataFrame:
-    """mapInPandas feature extraction: Arrow batches in, Arrow batches
-    out; one Python worker per input partition, no shuffle. At 100 TB
-    the payload column dominates I/O — callers should repartition by
-    size (``spark.sql.files.maxPartitionBytes``) so a batch of decoded
-    frames fits executor memory. Measured at 300k mixed payloads
-    (full pixel/sample decode via the default BMP/WAV/ZVID codecs),
-    local[32]: 1.12 s (~268k payloads/s).
-    """
-
-    # pass only the columns the function reads (guide §4.1): mapInPandas
-    # is opaque to column pruning, so without the select the scan also
-    # reads and ships every other column (e.g. the meta struct)
-    payloads = payloads.select("media_ref", "media_kind", "payload")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        decoder = _DECODER
-        for pdf in batches:
-            feats = [
-                decoder(bytes(p) if p is not None else b"", k)
-                for p, k in zip(pdf["payload"], pdf["media_kind"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_ref": pdf["media_ref"],
-                    "media_kind": pdf["media_kind"],
-                    "n_bytes": [len(p) if p is not None else 0 for p in pdf["payload"]],
-                    "feature": feats,
-                }
-            )
-
-    return payloads.mapInPandas(run, FEATURE_SCHEMA)
-
-
 DECODE_VERDICT_SCHEMA = T.StructType(
     [
         T.StructField("media_ref", T.StringType(), False),
@@ -226,142 +128,3 @@ def decode_verdicts(payloads: DataFrame) -> DataFrame:
             )
 
     return payloads.mapInPandas(run, DECODE_VERDICT_SCHEMA)
-
-
-FRAME_SAMPLE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType(), False),
-        T.StructField("ts_ms", T.LongType(), False),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("frame_sha", T.StringType(), True),
-    ]
-)
-
-
-def sample_video_frames(payloads: DataFrame, every_ms: int = 150) -> DataFrame:
-    """REAL frame sampling over ZVID payloads: the sample grid (one ts
-    per ``every_ms`` of declared duration) is planned JVM-side — but as
-    an ARRAY column, not an explode: exploding before Python would copy
-    the full payload bytes across the Arrow boundary once per sampled
-    frame (a 1-hour video sampled 100× ships 100 payload copies). Here
-    the payload crosses ONCE per video and Python expands the grid,
-    mapping each ts to its container frame with an O(1) byte-range
-    slice (``zvid_frame``'s property: skipped frames are never read).
-    ``frame_sha`` is sha256 over the frame bytes' uppercase hex, the
-    same cross-engine fingerprint convention as the resize oracle.
-    Measured at 100k videos → 450k sampled frames, local[32]: 0.87 s
-    (~519k frames/s)."""
-    dur = F.col("meta.duration_ms")
-    n = F.greatest((dur / every_ms).cast("int"), F.lit(1))
-    planned = payloads.filter(F.col("media_kind") == "video").select(
-        "media_ref",
-        "payload",
-        F.transform(
-            F.sequence(F.lit(0), n - 1), lambda i: i.cast("long") * every_ms
-        ).alias("_ts_grid"),
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            refs, tss, idxs, shas = [], [], [], []
-            for ref, payload, grid in zip(pdf["media_ref"], pdf["payload"], pdf["_ts_grid"]):
-                data = bytes(payload)
-                n_frames, frame_ms, frame_size = media_codecs.zvid_info(data)
-                for ts in grid:
-                    fi = min(int(ts) // frame_ms, n_frames - 1)
-                    off = 16 + fi * frame_size
-                    blob = data[off : off + frame_size]
-                    refs.append(ref)
-                    tss.append(int(ts))
-                    idxs.append(fi)
-                    shas.append(hashlib.sha256(blob.hex().upper().encode()).hexdigest())
-            yield pd.DataFrame(
-                {"media_ref": refs, "ts_ms": tss, "frame_idx": idxs, "frame_sha": shas}
-            )
-
-    return planned.mapInPandas(run, FRAME_SAMPLE_SCHEMA)
-
-
-def frame_sample_plan(payloads: DataFrame, every_ms: int = 200) -> DataFrame:
-    """Frame-sampling *plan* for video payloads: expands each payload row
-    into (media_ref, frame_idx, ts_ms) rows JVM-side; the per-frame
-    decode is ``sample_video_frames``. Demonstrates the explode-
-    before-Python pattern: frame bookkeeping stays in the JVM, Python
-    sees only the rows it must decode."""
-    n_frames = F.greatest(
-        (F.col("meta.duration_ms") / every_ms).cast("int"), F.lit(1)
-    )
-    return payloads.filter(F.col("media_kind") == "video").select(
-        "media_ref",
-        F.explode(F.sequence(F.lit(0), n_frames - 1)).alias("frame_idx"),
-    ).withColumn("ts_ms", F.col("frame_idx") * every_ms)
-
-
-# Pluggable resizer, same stance as the decoder: the default does a real
-# BMP decode → nearest-neighbor subsample → re-encode; other formats
-# need an injected codec.
-_RESIZER: Callable[[bytes, str, int, int], bytes] = media_codecs.default_resizer
-
-
-def set_resizer(fn: Callable[[bytes, str, int, int], bytes] | None) -> None:
-    global _RESIZER
-    _RESIZER = fn if fn is not None else media_codecs.default_resizer
-
-
-def deterministic_fake_resizer(payload: bytes, kind: str, tw: int, th: int) -> bytes:
-    """Stand-in for PIL resize: tile/truncate the payload to tw*th bytes
-    — deterministic, size-exact, codec-free."""
-    n = max(tw * th, 1)
-    if not payload:
-        return b"\x00" * n
-    return (payload * (n // len(payload) + 1))[:n]
-
-
-def resize_images(payloads: DataFrame, max_side: int = 256) -> DataFrame:
-    """Aspect-preserving image resize. The geometry is planned JVM-side
-    with pure integer arithmetic — ``t = max(1, (dim*max_side) div
-    max(w,h))`` when the longest side exceeds ``max_side`` — so Python
-    receives only image rows, already annotated with their target size
-    (the same explode-before-Python stance as ``frame_sample_plan``).
-    Integer planning is deliberate: float ``floor(dim*scale)`` differs
-    between engines (DuckDB's decimal literals round the other way), and
-    the DuckDB oracle must re-derive identical dims with ``//``. Output
-    schema = input schema with payload and meta.width/height rewritten.
-    """
-    w, h = F.col("meta.width"), F.col("meta.height")
-    mx = F.greatest(w, h)
-    shrink = mx > max_side
-
-    def target(dim):
-        t = F.floor((dim.cast("long") * max_side) / mx).cast("int")
-        return F.when(shrink, F.greatest(t, F.lit(1))).otherwise(dim)
-
-    planned = payloads.filter(F.col("media_kind") == "image").select(
-        "media_ref",
-        "media_kind",
-        "payload",
-        "meta",
-        target(w).alias("_tw"),
-        target(h).alias("_th"),
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        resizer = _RESIZER
-        for pdf in batches:
-            out = pdf.copy()
-            out["payload"] = [
-                resizer(bytes(p) if p is not None else b"", k, tw, th)
-                for p, k, tw, th in zip(
-                    pdf["payload"], pdf["media_kind"], pdf["_tw"], pdf["_th"]
-                )
-            ]
-            out["meta"] = [
-                {**(m if isinstance(m, dict) else m._asdict() if hasattr(m, "_asdict") else dict(m)),
-                 "width": int(tw), "height": int(th)}
-                for m, tw, th in zip(pdf["meta"], pdf["_tw"], pdf["_th"])
-            ]
-            yield out[["media_ref", "media_kind", "payload", "meta"]]
-
-    return planned.mapInPandas(run, MEDIA_PAYLOAD_SCHEMA)

@@ -34,6 +34,7 @@ remotely while the local readback found none). Last-writer-wins per
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
@@ -206,6 +207,15 @@ class Manifest:
             if name.startswith(_PARTITION_DIR) and _partition_value(name) in wanted:
                 shutil.rmtree(os.path.join(sink, name))
 
+    def reset(self) -> None:
+        """Delete the resume state: ``manifest.jsonl`` and both violation
+        sinks, every ``rules_hash`` namespace. Any other file in the
+        directory is kept."""
+        for sink in ("violations", "violations_table"):
+            shutil.rmtree(os.path.join(self.path, sink), ignore_errors=True)
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(self._rows_path)
+
     def read_violations(self, spark: SparkSession, rules_hash: str) -> DataFrame:
         """All persisted violations for ``rules_hash``: the per-partition
         sink UNION the table-rule sink. Explicit schema — an all-valid
@@ -255,6 +265,10 @@ def run_with_manifest(
     read pruned scans (doc_id/partition, spans.kind), so the full-table
     pass does not re-decode text bytes.
 
+    A pending partition named ``""`` raises ``ValueError`` after the
+    pending count and before any write: the sink would store it as the
+    null partition, and its commit would record no violations.
+
     R1 without ``media_catalog`` or M1 without ``media_verdicts`` raises
     ``ValueError`` before the manifest read and before any job: every
     partition would commit with the rule passing under the same
@@ -276,6 +290,13 @@ def run_with_manifest(
     }
     if not n_docs:
         return []
+    if "" in n_docs:
+        # Spark writes "" as the default (null) partition directory, so
+        # its sink rows would read back under null and never be counted
+        raise ValueError(
+            "partition '' cannot be validated: the violation sink stores an "
+            "empty-string partition value as null; rename the partition"
+        )
     todo = list(n_docs)
 
     def pending_pass() -> None:
